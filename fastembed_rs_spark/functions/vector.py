@@ -15,6 +15,8 @@ DOUBLE-math SQL oracle.
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -60,53 +62,76 @@ def cosine_similarity(a: Column | str, b: Column | str) -> Column:
 
 
 # ---------------------------------------------------------------------------
-# Fixed-dimension variants: flat getItem chains instead of lambda folds.
+# Fixed-dimension variants: flat get() chains instead of lambda folds.
 #
 # Spark's higher-order functions (zip_with/aggregate/transform) are
 # CodegenFallback — every element evaluation goes through the interpreted
 # expression path, ~50× slower than whole-stage codegen. When the vector
 # dimension is known (it always is for a given embedding model — `dim` in the
 # registry), an unrolled a[0]*b[0] + a[1]*b[1] + ... chain compiles into the
-# generated Java of the enclosing stage. Addition is left-associative, i.e.
-# the same sequential fold order as the lambda version and the DuckDB
-# oracle's list_sum, so results are bit-identical.
+# generated Java of the enclosing stage. Addition is left-associative and the
+# chain starts from the literal 0.0, i.e. the same sequential fold order as
+# the lambda version and the DuckDB oracle's list_sum, so results are
+# bit-identical (the 0.0 start matters for -0.0 products).
+#
+# The chain is written as SQL text and parsed by one F.expr call. Building
+# the same tree out of Column objects costs about 5 Py4J round trips per
+# term — about 10,000 for a dim-64 cosine, seconds of driver time per plan.
+# The text keeps the tree the Column builders made: double literals are
+# written 0.0D (a bare 0.0 parses as DECIMAL), and the sum is one flat
+# `0.0D + t0 + t1 + ...` chain, which parses left-associative without one
+# parenthesis level per term (nested parentheses made the first parse in a
+# fresh JVM 3× slower: 4-4.7 s against 1.4 s for a dim-64 cosine on a
+# 4-core host). The builders take column names only.
 # ---------------------------------------------------------------------------
 
-def _chain_sum(terms: list[Column]) -> Column:
-    # starts from literal 0.0 so the addition sequence is bit-identical to
-    # the lambda fold / DuckDB list_sum (matters for -0.0 products)
-    s = F.lit(0.0)
-    for term in terms:
-        s = s + term
-    return s
+def _elem(name: str) -> Callable[[int], str]:
+    """``i -> get(CAST(`name` AS ARRAY<DOUBLE>), i)`` as SQL text. get() (not
+    []) returns NULL past the end where ANSI indexing would throw."""
+    arr = "CAST(`" + name.replace("`", "``") + "` AS ARRAY<DOUBLE>)"
+    return lambda i: f"get({arr}, {i})"
 
 
-def dot_fixed(a: Column | str, b: Column | str, dim: int) -> Column:
+def _sum_sql(term: Callable[[int], str], dim: int) -> str:
+    """``0.0D + term(0) + ... + term(dim-1)``: the left fold from 0.0."""
+    return " + ".join(["0.0D", *(term(i) for i in range(dim))])
+
+
+def _dot_sql(a: str, b: str, dim: int) -> str:
+    x, y = _elem(a), _elem(b)
+    return _sum_sql(lambda i: f"coalesce({x(i)} * {y(i)}, 0.0D)", dim)
+
+
+def _norm_sql(v: str, dim: int) -> str:
+    x = _elem(v)
+    return f"sqrt({_sum_sql(lambda i: f'coalesce({x(i)} * {x(i)}, 0.0D)', dim)})"
+
+
+def dot_fixed(a: str, b: str, dim: int) -> Column:
     """Σ aᵢ·bᵢ over a known dimension, codegen-friendly. Arrays shorter than
     ``dim`` contribute 0.0 for the missing tail (common-prefix semantics of
     the reference, src/similarity.rs:14)."""
-    ad, bd = _to_double(a), _to_double(b)
-    # F.get (not getItem): ANSI mode throws on out-of-bounds indexing,
-    # get() returns NULL which the coalesce folds to 0.0
-    return _chain_sum([
-        F.coalesce(F.get(ad, i) * F.get(bd, i), F.lit(0.0)) for i in range(dim)
-    ])
+    return F.expr(_dot_sql(a, b, dim))
 
 
-def l2_norm_fixed(v: Column | str, dim: int) -> Column:
+def l2_norm_fixed(v: str, dim: int) -> Column:
     """sqrt(Σ vᵢ²) over a known dimension, codegen-friendly."""
-    vd = _to_double(v)
-    return F.sqrt(_chain_sum([
-        F.coalesce(F.get(vd, i) * F.get(vd, i), F.lit(0.0)) for i in range(dim)
-    ]))
+    return F.expr(_norm_sql(v, dim))
 
 
-def cosine_similarity_fixed(a: Column | str, b: Column | str, dim: int) -> Column:
+def cosine_similarity_fixed(a: str, b: str, dim: int) -> Column:
     """cosine_similarity with a known dimension — stays inside whole-stage
-    codegen; use on hot paths (pair joins over millions of rows)."""
-    na, nb = l2_norm_fixed(a, dim), l2_norm_fixed(b, dim)
-    return F.when((na == 0.0) | (nb == 0.0), F.lit(0.0)).otherwise(
-        dot_fixed(a, b, dim) / (na * nb)
+    codegen; use on hot paths (pair joins over millions of rows).
+
+    Codegen ceiling: a one-projection stage with this cosine compiles at
+    dim 96; at dim 128 its generated code passes Janino's 64 KB limit and
+    Spark falls back to interpreted evaluation (an ERROR log line, same
+    answers, pinned by tests/test_vector_functions.py). The registry's real
+    models are dim 384-2048, so for them this is the interpreted path."""
+    na, nb = _norm_sql(a, dim), _norm_sql(b, dim)
+    return F.expr(
+        f"CASE WHEN {na} = 0.0D OR {nb} = 0.0D THEN 0.0D "
+        f"ELSE ({_dot_sql(a, b, dim)}) / ({na} * {nb}) END"
     )
 
 

@@ -823,7 +823,8 @@ def embedding_near_dups_blocked(
         ids = pdf["id"].to_numpy()
         V = np.asarray([np.asarray(v, dtype=np.float64) for v in pdf["vec"]])
         d = V.shape[1]
-        # sequential fold over dims from a zero accumulator == _chain_sum order
+        # sequential fold over dims from a zero accumulator == the fixed-dim
+        # chain order (functions/vector.py)
         sq = np.zeros(len(ids))
         for i in range(d):
             sq += V[:, i] * V[:, i]

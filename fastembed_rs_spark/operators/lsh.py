@@ -183,12 +183,14 @@ def lsh_top_k(
         .dropDuplicates([query_id_col, id_col])
     )
     # fold cosine by default: the candidate set is small (that's the point
-    # of LSH), so the unrolled fixed-dim chain's janino compile time
-    # dominates its per-row win (measured 3.1s vs 1.2s at sf0.1). Pass
-    # ``dim`` only for huge candidate sets. Both paths are bit-identical
+    # of LSH), so the unrolled fixed-dim chain's parse, plan and janino
+    # compile time dominates its per-row win. ann_lsh_topk at sf0.1, one
+    # session, 7 interleaved runs each on a 4-core host: median 2.4 s with
+    # dim=64 against 1.45 s without. Pass ``dim`` only for huge candidate
+    # sets. Both paths are bit-identical
     # (tests/test_vector_functions.py::test_fixed_dim_bit_identical_to_fold).
     cos = (
-        cosine_similarity_fixed(F.col(query_vec_col), F.col(vec_col), dim)
+        cosine_similarity_fixed(query_vec_col, vec_col, dim)
         if dim
         else cosine_similarity(F.col(query_vec_col), F.col(vec_col))
     )

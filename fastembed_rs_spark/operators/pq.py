@@ -39,23 +39,21 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from fastembed_rs_spark.functions.vector import _chain_sum, _to_double
+from fastembed_rs_spark.functions.vector import _elem, _sum_sql, _to_double
 
 
-def _sq_dist_fixed(a: Column | str, b: Column | str, dsub: int) -> Column:
+def _sq_dist_fixed(a: str, b: str, dsub: int) -> Column:
     """Σ (aᵢ-bᵢ)² over a known sub-dimension as a flat codegen chain,
     left-folded from 0.0 (bit-identical to the oracle's list_sum)."""
-    ad, bd = _to_double(a), _to_double(b)
-    terms = []
-    for i in range(dsub):
-        d = F.get(ad, i) - F.get(bd, i)
-        terms.append(d * d)
-    return _chain_sum(terms)
+    x, y = _elem(a), _elem(b)
+    return F.expr(_sum_sql(
+        lambda i: f"({x(i)} - {y(i)}) * ({x(i)} - {y(i)})", dsub
+    ))
 
 
-def _dot_fixed(a: Column | str, b: Column | str, dsub: int) -> Column:
-    ad, bd = _to_double(a), _to_double(b)
-    return _chain_sum([F.get(ad, i) * F.get(bd, i) for i in range(dsub)])
+def _dot_fixed(a: str, b: str, dsub: int) -> Column:
+    x, y = _elem(a), _elem(b)
+    return F.expr(_sum_sql(lambda i: f"{x(i)} * {y(i)}", dsub))
 
 
 def split_subvectors(

@@ -23,7 +23,12 @@ from fastembed_rs_spark.functions.vector import cosine_similarity, cosine_simila
 
 def _cos(a: str, b: str, dim: int | None) -> Column:
     """Fixed-dim (codegen) cosine when the embedding dimension is known,
-    interpreted higher-order-function fallback otherwise."""
+    interpreted higher-order-function fallback otherwise.
+
+    The fixed chain only stays in whole-stage codegen up to a ceiling: at
+    dim 128 the stage's generated code passes Janino's 64 KB limit, Spark
+    logs the compile error and runs the stage interpreted (same answers).
+    The registry's real models (dim 384-2048) are all past it."""
     return cosine_similarity_fixed(a, b, dim) if dim is not None else cosine_similarity(a, b)
 
 

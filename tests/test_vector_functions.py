@@ -4,6 +4,7 @@ bit-equality between the lambda-fold and fixed-dim formulations."""
 from __future__ import annotations
 
 import math
+import struct
 
 import numpy as np
 import pytest
@@ -15,6 +16,7 @@ from fastembed_rs_spark.functions.vector import (
     dot,
     dot_fixed,
     l2_norm,
+    l2_norm_fixed,
     l2_normalize,
 )
 
@@ -52,15 +54,107 @@ def test_cosine_zero_guard(spark):
     assert got[0] == pytest.approx(want, rel=1e-12)
 
 
+def _bits(x):
+    """Exact identity of a double: NULL, NaN, and the sign of zero count."""
+    if x is None:
+        return None
+    return "nan" if math.isnan(x) else struct.pack(">d", x)
+
+
+def _left_fold(terms):
+    s = 0.0
+    for t in terms:
+        s += t
+    return s
+
+
 def test_fixed_dim_bit_identical_to_fold(spark):
-    df = _df(spark)
-    fold = df.select(dot("a", "b"), cosine_similarity("a", "b"), l2_norm("a")).collect()
-    fixed = df.select(
-        dot_fixed("a", "b", 3), cosine_similarity_fixed("a", "b", 3),
-    ).collect()
-    for fr, xr in zip(fold, fixed):
-        assert fr[0] == xr[0]  # exact, not approx: same fold order
-        assert fr[1] == xr[1]
+    """The unrolled fixed-dim chains fold in the same order as the lambda
+    folds, so every score is bit-identical: random vectors at dim 3, 64 and
+    128 (128 is past the whole-stage codegen ceiling, so this pins the
+    interpreted fallback's answers), zero, -0.0, NaN and overflowing
+    inputs, a short vector, a NULL vector, and column names that need
+    quoting. The pq kernels equal a Python left fold from 0.0."""
+    from fastembed_rs_spark.operators import pq
+
+    rng = np.random.default_rng(7)
+
+    def rand(dim, n):
+        return [(list(map(float, rng.standard_normal(dim))),
+                 list(map(float, rng.standard_normal(dim)))) for _ in range(n)]
+
+    nz = -0.0
+    cases = {
+        3: ("a", "b", VECS + [
+            ([nz, nz, nz], [1.0, 2.0, 3.0]),
+            ([nz, 1.0, nz], [1.0, nz, 2.0]),
+            ([float("nan"), 1.0, 2.0], [1.0, 1.0, 1.0]),
+            ([1e300, 1e300, 1.0], [1e300, -1e300, 1.0]),
+            ([1e-300, 0.0, 0.0], [1e-300, 0.0, 0.0]),
+        ]),
+        64: ("a col", "b`q", rand(64, 20) + [
+            ([0.5] * 10, [0.25] * 64),   # short: the missing tail adds 0.0
+            (None, [1.0] * 64),          # NULL vector
+        ]),
+        128: ("a", "b", rand(128, 5)),
+    }
+    for dim, (an, bn, pairs) in cases.items():
+        aq, bq = ("`" + n.replace("`", "``") + "`" for n in (an, bn))
+        df = spark.createDataFrame(pairs, f"{aq} array<double>, {bq} array<double>")
+        ac, bc = F.col(aq), F.col(bq)
+        fold = df.select(dot(ac, bc), cosine_similarity(ac, bc), l2_norm(ac)).collect()
+        fixed = df.select(
+            dot_fixed(an, bn, dim), cosine_similarity_fixed(an, bn, dim),
+            l2_norm_fixed(an, dim), pq._sq_dist_fixed(an, bn, dim),
+            pq._dot_fixed(an, bn, dim),
+        ).collect()
+        for (a, b), fr, xr in zip(pairs, fold, fixed):
+            if a is None:
+                # the fixed chains coalesce missing elements to 0.0, so a
+                # NULL vector scores as the zero vector (the DuckDB oracle's
+                # coalesce(list_sum(...), 0.0) does the same); the lambda
+                # folds return NULL
+                assert fr[:] == (None, None, None)
+                assert xr[:3] == (0.0, 0.0, 0.0) and xr[3:] == (None, None)
+                continue
+            # exact, not approx: same fold order
+            assert [_bits(v) for v in xr[:3]] == [_bits(v) for v in fr], (dim, a, b)
+            if len(a) < dim:
+                assert xr[3:] == (None, None)  # no coalesce in the pq chains
+                continue
+            want_sq = _left_fold((x - y) * (x - y) for x, y in zip(a, b))
+            want_dot = _left_fold(x * y for x, y in zip(a, b))
+            assert [_bits(xr[3]), _bits(xr[4])] == [_bits(want_sq), _bits(want_dot)]
+
+
+def test_fixed_builders_make_few_py4j_calls(spark):
+    """A fixed-dim builder is one parsed SQL string, not one Column per
+    term: building the dim-64 expressions makes a handful of driver→JVM
+    round trips (a Column-per-term build made about 10,000 for the
+    cosine)."""
+    import gc
+
+    client = spark.sparkContext._gateway._gateway_client
+    send = client.send_command
+    calls = []
+
+    def counting(*args, **kwargs):
+        calls.append(args)
+        return send(*args, **kwargs)
+
+    # the built Columns stay referenced: freeing a JVM object is a round
+    # trip too, and so is the cleanup of earlier garbage
+    built = []
+    gc.collect()
+    client.send_command = counting
+    try:
+        for build in (lambda: cosine_similarity_fixed("a", "b", 64),
+                      lambda: l2_norm_fixed("a", 64)):
+            del calls[:]
+            built.append(build())
+            assert len(calls) <= 5, len(calls)
+    finally:
+        client.send_command = send
 
 
 def test_fixed_dim_short_array_tail_is_zero(spark):
