@@ -69,9 +69,11 @@ def char_shingles(text: Column | str, k: int = 3) -> Column:
 
 def doc_fingerprint(text: Column | str) -> Column:
     """Document fingerprint: rolling hash over the space-joined token stream —
-    whitespace/punctuation-insensitive content hash (long)."""
+    whitespace/punctuation-insensitive content hash (long). A NULL text has
+    no tokens and gets 0, as empty and punctuation-only texts do (and as in
+    ``duck_doc_fingerprint``)."""
     joined = F.array_join(tokens(text), " ")
-    return token_hash(joined)
+    return F.coalesce(token_hash(joined), F.lit(0).cast("long"))
 
 
 # ---------------------------------------------------------------------------

@@ -32,15 +32,18 @@ def _to_double(v: Column | str) -> Column:
 def dot(a: Column | str, b: Column | str) -> Column:
     """Σ aᵢ·bᵢ over the common prefix (reference stops at the shorter slice,
     src/similarity.rs:14 — ``zip_with`` pads with NULL instead, so we coalesce
-    missing products to 0.0 to match)."""
+    missing products to 0.0 to match). A NULL vector scores 0.0, as in the
+    fixed-dim chains and the DuckDB oracle."""
     prods = F.zip_with(_to_double(a), _to_double(b), lambda x, y: x * y)
-    return F.aggregate(prods, F.lit(0.0), lambda acc, x: acc + F.coalesce(x, F.lit(0.0)))
+    folded = F.aggregate(prods, F.lit(0.0), lambda acc, x: acc + F.coalesce(x, F.lit(0.0)))
+    return F.coalesce(folded, F.lit(0.0))
 
 
 def l2_norm(v: Column | str) -> Column:
-    """sqrt(Σ vᵢ²)."""
+    """sqrt(Σ vᵢ²); 0.0 for a NULL vector, as in ``l2_norm_fixed``."""
     vd = _to_double(v)
-    return F.sqrt(F.aggregate(vd, F.lit(0.0), lambda acc, x: acc + x * x))
+    norm = F.sqrt(F.aggregate(vd, F.lit(0.0), lambda acc, x: acc + x * x))
+    return F.coalesce(norm, F.lit(0.0))
 
 
 def l2_normalize(v: Column | str) -> Column:

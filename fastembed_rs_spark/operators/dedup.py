@@ -4,14 +4,24 @@ Beyond-reference operators (the reference has no dedup; its similarity
 primitives are the building blocks — src/similarity.rs). All variants are
 deterministic integer math shared with the DuckDB oracle.
 
-* exact_dedup          — content fingerprint groupBy (one shuffle)
-* minhash_signatures   — k minhashes over char-shingles (explode + groupBy min,
-                         map-side combined)
+* exact_dedup          — token-stream fingerprints (NumPy kernel), then one
+                         groupBy
+* minhash_signatures   — k minhashes over char-shingles, computed per
+                         document in one NumPy pass (no shuffle)
 * lsh_candidate_pairs  — banding self-join: pairs sharing ≥1 band bucket
-* verify_jaccard       — exact shingle-set Jaccard on candidates only
+* verify_candidates    — exact shingle-set Jaccard on candidates only: sets
+                         built once per document by the NumPy kernel,
+                         intersected JVM-side per pair
 * simhash / simhash_near_pairs — 32-bit simhash + banded Hamming search
 * embedding_near_dups  — cosine threshold pairs (brute force; IVF variant via
                          operators.topk for scale)
+
+The rolling hashes run in the ``operators.fast_text`` kernels: as Spark
+expressions they are per-character lambda folds, and higher-order functions
+are CodegenFallback (interpreted). The Column expressions ``shingle_hashes``
+and ``jaccard_shingles`` stay as the exact references the kernels are
+pinned against (tests/test_fast_text.py); ``minhash_signature_array`` is
+the row-local streaming form.
 
 Scale notes: minhash-LSH is the canonical 100 TB near-dedup: the only O(n²)
 step is within LSH buckets, and band keys are uniform hashes → skew-safe.
@@ -21,16 +31,21 @@ joins.
 
 from __future__ import annotations
 
+from typing import Iterator
+
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from fastembed_rs_spark.functions.text import (
-    HASH_MOD,
-    char_shingles,
-    doc_fingerprint,
-    token_hash,
-)
+from fastembed_rs_spark.functions.text import HASH_MOD, char_shingles, token_hash
 from fastembed_rs_spark.functions.vector import cosine_similarity
+from fastembed_rs_spark.operators.fast_text import (
+    doc_fingerprints_fast,
+    shingle_minhash,
+    shingle_sets_fast,
+    verify_candidates_from_sets,
+    word_ngram_postings_fast,
+)
+from fastembed_rs_spark.operators.scale import spread_if_narrow
 
 # Deterministic affine minhash coefficients h_i(x) = (a_i*x + b_i) % HASH_MOD.
 # Fixed constants (generated once from a seeded PRNG) shared verbatim with the
@@ -73,12 +88,12 @@ def minhash_coeffs(n: int) -> list[tuple[int, int]]:
 
 def exact_dedup(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """Group documents by token-stream fingerprint; one row per distinct
-    content: (fingerprint, n_docs, canonical_id = min id)."""
-    from fastembed_rs_spark.operators.scale import spread_if_narrow
+    content: (fingerprint, n_docs, canonical_id = min id).
 
+    NULL, empty and punctuation-only texts have no tokens and share
+    fingerprint 0, as in the DuckDB oracle's ``duck_doc_fingerprint``."""
     return (
-        spread_if_narrow(df.select(F.col(id_col), F.col(text_col)))
-        .select(F.col(id_col), doc_fingerprint(text_col).alias("fingerprint"))
+        doc_fingerprints_fast(df, id_col, text_col)
         .groupBy("fingerprint")
         .agg(
             F.count("*").cast("long").alias("n_docs"),
@@ -98,24 +113,32 @@ def minhash_signatures(
 ) -> DataFrame:
     """(id, mh_0..mh_{n-1}): min over the shingle set of each affine hash.
 
-    Implemented as explode → groupBy(id).agg(min(...) × n): a single shuffle
-    with map-side partial mins, the shape that scales.
-    Documents with no shingles (len(text) < k) get no row.
-    """
+    One NumPy pass per Arrow batch (``fast_text.shingle_minhash``), no
+    shuffle. Documents with no shingles (len(text) < k) get no row."""
     coeffs = minhash_coeffs(num_hashes)
-    # Spread before the shingle explosion only when the scan is narrow
-    # (single-row-group test parquet): the rolling-hash work is the heavy
-    # per-row stage. A many-split 100 TB scan passes through untouched.
-    from fastembed_rs_spark.operators.scale import spread_if_narrow
+    mh_cols = ", ".join(f"mh_{i} long" for i in range(len(coeffs)))
+    schema = f"{id_col} {df.schema[id_col].dataType.simpleString()}, {mh_cols}"
 
-    exploded = spread_if_narrow(df.select(F.col(id_col), F.col(text_col))).select(
-        F.col(id_col), F.explode(shingle_hashes(text_col, k_shingle)).alias("sh")
-    )
-    aggs = [
-        F.min((F.col("sh") * F.lit(a) + F.lit(b)) % F.lit(HASH_MOD)).alias(f"mh_{i}")
-        for i, (a, b) in enumerate(coeffs)
-    ]
-    return exploded.groupBy(id_col).agg(*aggs)
+    def gen(batches: Iterator) -> Iterator:
+        import numpy as np
+        import pandas as pd
+
+        a = np.asarray([c[0] for c in coeffs], dtype=np.int64)
+        b = np.asarray([c[1] for c in coeffs], dtype=np.int64)
+        for pdf in batches:
+            ids, sigs = [], []
+            for rid, text in zip(pdf[id_col], pdf[text_col]):
+                sig = shingle_minhash((text or "").lower(), k_shingle, a, b)
+                if sig is not None:
+                    ids.append(rid)
+                    sigs.append(sig)
+            if ids:
+                mat = np.vstack(sigs)
+                yield pd.DataFrame(
+                    {id_col: ids, **{f"mh_{i}": mat[:, i] for i in range(len(coeffs))}}
+                )
+
+    return spread_if_narrow(df.select(id_col, text_col)).mapInPandas(gen, schema=schema)
 
 
 def minhash_signature_array(
@@ -123,12 +146,12 @@ def minhash_signature_array(
     num_hashes: int = len(MINHASH_COEFFS),
 ) -> Column:
     """``array<long>`` minhash signature computed row-locally — the same
-    values as ``minhash_signatures`` (pinned by test) but with NO
-    aggregation, so it can run as a stateless map stage inside a streaming
-    pipeline (a streaming groupBy would be a second stateful operator).
+    values as ``minhash_signatures`` (pinned by test) as a Column
+    expression, so it can run as a stateless map stage inside a streaming
+    pipeline.
 
     Documents with no shingles (len < k) yield an all-NULL signature —
-    filter those out before use (the aggregation form emits no row)."""
+    filter those out before use (``minhash_signatures`` emits no row)."""
     sh = shingle_hashes(text, k_shingle)
     coeffs = minhash_coeffs(num_hashes)
 
@@ -203,26 +226,13 @@ def verify_candidates(
     candidates: DataFrame, docs: DataFrame, id_col: str, text_col: str,
     k_shingle: int = 5, threshold: float = 0.8, round_to: int = 6,
 ) -> DataFrame:
-    """Join candidate pairs back to texts and keep pairs with exact shingle
-    Jaccard ≥ threshold: (id_a, id_b, jaccard).
-
-    The candidate set is repartitioned before the Jaccard projection: the
-    pair table is tiny in bytes, so AQE would otherwise coalesce it to one
-    partition and serialize the expensive per-pair set math."""
-    d = docs.select(F.col(id_col), F.col(text_col))
-    parallelism = candidates.sparkSession.sparkContext.defaultParallelism
-    out = (
-        candidates.repartition(parallelism)
-        .join(d.withColumnsRenamed({id_col: "id_a", text_col: "__ta"}), on="id_a")
-        .join(d.withColumnsRenamed({id_col: "id_b", text_col: "__tb"}), on="id_b")
-        .withColumn(
-            "jaccard",
-            F.round(jaccard_shingles(F.col("__ta"), F.col("__tb"), k_shingle), round_to),
-        )
-        .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "jaccard")
+    """Keep candidate pairs with exact shingle Jaccard ≥ threshold:
+    (id_a, id_b, jaccard). Each document's shingle set is built once by
+    the NumPy kernel; the per-pair intersection stays JVM-side."""
+    sets = shingle_sets_fast(docs, id_col, text_col, k_shingle)
+    return verify_candidates_from_sets(
+        candidates, sets, id_col, threshold=threshold, round_to=round_to
     )
-    return out
 
 
 def word_ngrams(text: Column | str, n: int = 3) -> Column:
@@ -265,8 +275,6 @@ def ngram_jaccard_pairs(
     all-pairs cross join."""
     if threshold <= 0:
         return _ngram_jaccard_allpairs(df, id_col, text_col, n, threshold, round_to)
-    from fastembed_rs_spark.operators.fast_text import word_ngram_postings_fast
-
     # postings via the Python kernel — string-exact, skips the interpreted
     # transform/array_distinct/explode chain (measured ~2x on the stage).
     # EAGER checkpoint: both sides of the self-join (and the optional hot-
@@ -367,8 +375,6 @@ def jaccard_prefix_pairs(
     """
     if threshold <= 0:
         raise ValueError("prefix filtering needs threshold > 0")
-    from fastembed_rs_spark.operators.fast_text import word_ngram_postings_fast
-
     # the postings kernel feeds two plan branches (df counts and the
     # per-doc tables) — materialize once or each branch re-runs the
     # mapInPandas tokenization (measured: the recompute dominated, ~10x)
@@ -588,8 +594,6 @@ def jaccard_pairs_adaptive(
     if threshold <= 0:
         raise ValueError("adaptive jaccard needs threshold > 0 "
                          "(use ngram_jaccard_pairs for threshold <= 0)")
-    from fastembed_rs_spark.operators.fast_text import word_ngram_postings_fast
-
     # LAZY checkpoint: the decision aggregate below is the first action
     # (one single-path consumer), so one job both materializes the
     # postings and measures them
@@ -628,8 +632,6 @@ def _ngram_jaccard_allpairs(
     threshold: float = 0.1, round_to: int = 6,
 ) -> DataFrame:
     """All-pairs cross-join variant (O(n²) — small candidate subsets only)."""
-    from fastembed_rs_spark.operators.scale import spread_if_narrow
-
     grams = df.select(
         F.col(id_col), F.array_distinct(word_ngrams(text_col, n)).alias("__grams")
     )
@@ -940,8 +942,6 @@ def embedding_near_dups(
     # The pair join's output parallelism = stream-side partitions; spread the
     # stream side (when narrow) so the O(n²) scoring parallelizes even from a
     # single-split scan (measured 3× at sf0.1; no-op on a many-split scan)
-    from fastembed_rs_spark.operators.scale import spread_if_narrow
-
     a = spread_if_narrow(emb).select(
         F.col(id_col).alias("id_a"), F.col(vec_col).alias("__va")
     )
@@ -1037,8 +1037,6 @@ def containment_pairs(
     word n-grams near-unique outside real overlap); for threshold > 0 the
     zero-overlap pairs the index never produces all score 0 < threshold,
     so this equals the all-pairs formulation exactly."""
-    from fastembed_rs_spark.operators.fast_text import word_ngram_postings_fast
-
     # EAGER checkpoint: both self-join sides consume the kernel postings
     # (see ngram_jaccard_pairs — the kernel otherwise scans twice)
     sized = word_ngram_postings_fast(df, id_col, text_col, n).localCheckpoint()

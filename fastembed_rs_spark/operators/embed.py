@@ -307,7 +307,13 @@ def embed_sparse(
                 if spec.sparse_method == "bgem3":
                     hidden = select_output(outputs, spec.output_key)  # (B,T,H)
                     w, b = get_sparse_linear(spec, session_options)
-                    tok_w = np.maximum(hidden @ w + b, 0.0)  # (B,T)
+                    # explicit left fold over H, not ``hidden @ w``: a BLAS
+                    # product's summation order depends on the batch shape,
+                    # so a document's weights would change with its batch
+                    acc = np.zeros(hidden.shape[:-1], dtype=np.float32)
+                    for h in range(hidden.shape[-1]):
+                        acc += hidden[..., h] * w[h]
+                    tok_w = np.maximum(acc + b, 0.0)  # (B,T)
                     for i in range(len(texts)):
                         on = mask[i] == 1
                         idx, vals = max_by_token_id(ids[i][on], tok_w[i][on], special_ids)

@@ -1,14 +1,20 @@
 """Arrow-batched NumPy kernels for the exact text hashes.
 
 The engine's canonical text hash (base-31 rolling polynomial mod 1e9+7,
-functions/text.py) is *exact integer math* — so a vectorized NumPy
-implementation inside ``mapInPandas`` produces bit-identical results to the
-Catalyst expression path and the DuckDB oracle, while replacing millions of
-interpreted per-character lambda steps with a handful of array ops per Arrow
-batch. Measured at sf0.1: dense_hash_embed 6.0s → ~1s, minhash signature
-stage ~3× faster. (Higher-order functions are CodegenFallback — every
-character of every token walks the interpreted expression tree; that is the
-entire cost these kernels remove.)
+functions/text.py) is *exact integer math*, so a vectorized NumPy
+implementation inside ``mapInPandas`` gives bit-identical results to the
+Catalyst expressions in functions/text.py and to the DuckDB oracle. As
+expressions, the hashes are per-character lambda folds, and higher-order
+functions are CodegenFallback: every character of every token walks the
+interpreted expression tree. The kernels replace that with a handful of
+array ops per Arrow batch.
+
+The public curation operators run on these kernels: ``dedup.exact_dedup``
+groups ``doc_fingerprints_fast``, ``dedup.minhash_signatures`` applies
+``shingle_minhash`` per document, and ``dedup.verify_candidates`` is
+``shingle_sets_fast`` followed by ``verify_candidates_from_sets``. The
+catalog queries also call the kernels directly. Each kernel is pinned
+against its Column-expression reference by tests/test_fast_text.py.
 
 Exactness argument, kernel by kernel:
 * codepoints: ``utf-32-le`` decode == Spark's per-char ``ascii()`` /
@@ -123,50 +129,23 @@ def hash_embed_coords_fast(
     return out.withColumn("weight", F.round("weight", round_to))
 
 
-def minhash_signatures_fast(
-    df: DataFrame, id_col: str, text_col: str, k_shingle: int = 5,
-    coeffs: list[tuple[int, int]] | None = None,
-) -> DataFrame:
-    """NumPy fast path of ``dedup.minhash_signatures`` — identical output
-    (id, mh_0..mh_{n-1}). Window hashes come from k shifted slices of the
+def shingle_minhash(s: str, k: int, a, b):
+    """Minhash signature (int64 array, one min per affine pair ``(a, b)``)
+    of the k-char shingles of the already-lowered ``s``, or None when ``s``
+    is shorter than k. Window hashes come from k shifted slices of the
     codepoint array (no shingle strings are ever materialized); duplicates
     need no dedup since MIN over a multiset equals MIN over its set."""
-    from fastembed_rs_spark.operators.dedup import MINHASH_COEFFS
+    import numpy as np
 
-    cfs = coeffs if coeffs is not None else MINHASH_COEFFS
-    mh_cols = ", ".join(f"mh_{i} long" for i in range(len(cfs)))
-    schema = f"{id_col} {_out_id_type(df, id_col)}, {mh_cols}"
-
-    def gen(batches: Iterator) -> Iterator:
-        import numpy as np
-        import pandas as pd
-
-        a = np.asarray([c[0] for c in cfs], dtype=np.int64)
-        b = np.asarray([c[1] for c in cfs], dtype=np.int64)
-        for pdf in batches:
-            out_ids, out_sigs = [], []
-            for rid, text in zip(pdf[id_col], pdf[text_col]):
-                codes = _codepoints((text or "").lower())
-                n = len(codes)
-                if n < k_shingle:
-                    continue
-                h = np.zeros(n - k_shingle + 1, dtype=np.int64)
-                for j in range(k_shingle):
-                    h = (h * HASH_BASE + codes[j : n - k_shingle + 1 + j]) % HASH_MOD
-                # (h*a + b) % MOD: h,a < 1e9+7 → products < 1.1e18 < 2^63
-                sigs = ((h[:, None] * a[None, :] + b[None, :]) % HASH_MOD).min(axis=0)
-                out_ids.append(rid)
-                out_sigs.append(sigs)
-            if not out_ids:
-                continue
-            sig_mat = np.vstack(out_sigs)
-            data = {id_col: out_ids}
-            for i in range(len(cfs)):
-                data[f"mh_{i}"] = sig_mat[:, i]
-            yield pd.DataFrame(data)
-
-    src = spread_if_narrow(df.select(id_col, text_col))
-    return src.mapInPandas(gen, schema=schema)
+    codes = _codepoints(s)
+    n = len(codes)
+    if n < k:
+        return None
+    h = np.zeros(n - k + 1, dtype=np.int64)
+    for j in range(k):
+        h = (h * HASH_BASE + codes[j : n - k + 1 + j]) % HASH_MOD
+    # (h*a + b) % MOD: h,a < 1e9+7 → products < 1.1e18 < 2^63
+    return ((h[:, None] * a[None, :] + b[None, :]) % HASH_MOD).min(axis=0)
 
 
 def splade_like_coords_fast(
@@ -234,28 +213,17 @@ def shingle_sets_fast(
     return src.mapInPandas(gen, schema=schema)
 
 
-def verify_candidates_fast(
-    candidates: DataFrame, docs: DataFrame, id_col: str, text_col: str,
-    k_shingle: int = 5, threshold: float = 0.8, round_to: int = 6,
-) -> DataFrame:
-    """``dedup.verify_candidates`` with the shingle sets precomputed once per
-    document by the fast kernel; the per-pair intersection stays JVM-side
-    (``array_intersect``, hash-set based). Same output (id_a, id_b, jaccard).
-    """
-    sets = shingle_sets_fast(docs, id_col, text_col, k_shingle)
-    return verify_candidates_from_sets(
-        candidates, sets, id_col, threshold=threshold, round_to=round_to
-    )
-
-
 def verify_candidates_from_sets(
     candidates: DataFrame, sets: DataFrame, id_col: str,
     threshold: float = 0.8, round_to: int = 6,
 ) -> DataFrame:
     """Exact shingle-Jaccard verify over prepared ``(id, shingles)`` sets —
-    the join tail of ``verify_candidates_fast``, split out so callers that
+    the join tail of ``dedup.verify_candidates``, split out so callers that
     already computed the sets (e.g. via ``minhash_bundle_fast``'s single
     fused pass) don't pay a second kernel scan of the corpus."""
+    # repartition the candidates: the pair table is tiny in bytes, so AQE
+    # would otherwise coalesce it to one partition and serialize the
+    # per-pair set math
     parallelism = candidates.sparkSession.sparkContext.defaultParallelism
     inter = F.size(F.array_intersect("__sa", "__sb")).cast("double")
     union = F.size("__sa").cast("double") + F.size("__sb").cast("double") - inter
@@ -272,7 +240,8 @@ def verify_candidates_from_sets(
 
 def doc_fingerprints_fast(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """NumPy fast path of ``functions.text.doc_fingerprint`` (rolling hash of
-    the space-joined token stream): (id, fingerprint long)."""
+    the space-joined token stream): (id, fingerprint long). A NULL text has
+    no tokens and gets fingerprint 0."""
     schema = f"{id_col} {_out_id_type(df, id_col)}, fingerprint long"
 
     def gen(batches: Iterator) -> Iterator:
@@ -287,19 +256,6 @@ def doc_fingerprints_fast(df: DataFrame, id_col: str, text_col: str) -> DataFram
 
     src = spread_if_narrow(df.select(id_col, text_col))
     return src.mapInPandas(gen, schema=schema)
-
-
-def exact_dedup_fast(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """``dedup.exact_dedup`` over the fast fingerprint kernel — same output
-    (fingerprint, n_docs, canonical_id)."""
-    return (
-        doc_fingerprints_fast(df, id_col, text_col)
-        .groupBy("fingerprint")
-        .agg(
-            F.count("*").cast("long").alias("n_docs"),
-            F.min(id_col).alias("canonical_id"),
-        )
-    )
 
 
 def token_hash_rows_fast(
@@ -526,7 +482,7 @@ def minhash_bundle_fast(
     computes them together per document; every column is value-identical
     to its standalone kernel (same helpers, same math — pinned by test):
 
-    - ``mh_*``: exactly ``minhash_signatures_fast`` — NULL (instead of a
+    - ``mh_*``: exactly ``dedup.minhash_signatures`` — NULL (instead of a
       missing row) for docs with fewer than ``k_shingle`` characters;
       filter ``mh_0 IS NOT NULL`` to recover the signature-table shape.
     - ``shingles``: exactly ``shingle_sets_fast``.
@@ -562,19 +518,7 @@ def minhash_bundle_fast(
                     list({s[i: i + k_shingle]
                           for i in range(len(s) - k_shingle + 1)})
                 )
-                codes = _codepoints(s)
-                n = len(codes)
-                if n < k_shingle:
-                    sig_rows.append(None)
-                else:
-                    h = np.zeros(n - k_shingle + 1, dtype=np.int64)
-                    for j in range(k_shingle):
-                        h = (h * HASH_BASE
-                             + codes[j: n - k_shingle + 1 + j]) % HASH_MOD
-                    sig_rows.append(
-                        ((h[:, None] * a[None, :] + b[None, :])
-                         % HASH_MOD).min(axis=0)
-                    )
+                sig_rows.append(shingle_minhash(s, k_shingle, a, b))
                 if with_simhash:
                     ts = _tokens(text or "")
                     toks.extend(ts)

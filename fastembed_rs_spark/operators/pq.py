@@ -255,9 +255,9 @@ def pq_adc_topk(
             ).alias("score"),
         )
     )
-    # two-phase top-k (same (score desc, id asc) rank): ≤ k rows per
-    # (query, partition) reach the exchange instead of the whole scored
-    # corpus landing in |queries| window tasks
+    # window top-k (same (score desc, id asc) rank): its partial
+    # WindowGroupLimit lets ≤ k rows per (query, map task) reach the
+    # exchange instead of the whole scored corpus
     from fastembed_rs_spark.operators.topk import _ranked_topk
 
     return _ranked_topk(folded, query_id, id_col, k)
@@ -413,9 +413,9 @@ def ivf_pq_topk(
             ).alias("score"),
         )
     )
-    # two-phase top-k (same (score desc, id asc) rank): ≤ k rows per
-    # (query, partition) reach the exchange instead of every candidate
-    # landing in |queries| window tasks
+    # window top-k (same (score desc, id asc) rank): its partial
+    # WindowGroupLimit lets ≤ k rows per (query, map task) reach the
+    # exchange instead of every candidate
     from fastembed_rs_spark.operators.topk import _ranked_topk
 
     return _ranked_topk(folded, query_id, id_col, k)
@@ -540,9 +540,9 @@ def rq_adc_topk(
             F.round(F.col("__dot1") + F.col("__dot2"), round_to).alias("score"),
         )
     )
-    # two-phase top-k (same (score desc, id asc) rank): ≤ k rows per
-    # (query, partition) reach the exchange instead of the whole scored
-    # corpus landing in |queries| window tasks
+    # window top-k (same (score desc, id asc) rank): its partial
+    # WindowGroupLimit lets ≤ k rows per (query, map task) reach the
+    # exchange instead of the whole scored corpus
     from fastembed_rs_spark.operators.topk import _ranked_topk
 
     return _ranked_topk(scored, query_id, id_col, k)

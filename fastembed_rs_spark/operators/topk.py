@@ -4,9 +4,9 @@ bucketed variant for scale.
 Reference semantics: ``top_k(query, corpus, k)`` scores the query against every
 corpus vector, sorts desc and truncates (src/similarity.rs:31-40). In Spark
 that is a broadcast of the (small) query side against the (huge) corpus side,
-a JVM-side cosine expression, and a two-phase top-k so that only ≤ k rows per
-(query, partition) ever reach the shuffle — the corpus itself is never
-shuffled.
+a JVM-side cosine expression, and a window top-k whose partial
+``WindowGroupLimit`` keeps only ≤ k rows per (query, map task) ahead of the
+shuffle — the corpus itself is never shuffled.
 
 At 100 TB the brute-force variant is the correctness baseline; ``ivf_top_k``
 is the scale path: corpus vectors are bucketed by nearest coarse centroid
@@ -34,23 +34,17 @@ def _cos(a: str, b: str, dim: int | None) -> Column:
 
 def _ranked_topk(scored: DataFrame, query_id: str, id_col: str, k: int,
                  score_col: str = "score") -> DataFrame:
-    """Two-phase top-k: per-partition pre-prune, then exact global rank.
+    """Exact per-query top-k: ``row_number()`` over the query, score desc,
+    then id asc (deterministic ties).
 
-    Phase 1 ranks within (query, input partition) and keeps ≤ k rows per
-    partition, so the shuffle for the exact phase carries at most
-    k·num_partitions rows per query instead of the whole corpus.
-    Ranking is deterministic: score desc, then id asc.
+    For k ≤ ``spark.sql.optimizer.windowGroupLimitThreshold`` (1000 by
+    default) Spark plans a partial ``WindowGroupLimit`` below the exchange,
+    so each map task ships at most k rows per query; the corpus itself is
+    never shuffled.
     """
-    part = scored.withColumn("__pid", F.spark_partition_id())
-    w1 = Window.partitionBy(query_id, "__pid").orderBy(F.desc(score_col), F.asc(id_col))
-    pruned = (
-        part.withColumn("__r1", F.row_number().over(w1))
-        .filter(F.col("__r1") <= k)
-        .drop("__pid", "__r1")
-    )
-    w2 = Window.partitionBy(query_id).orderBy(F.desc(score_col), F.asc(id_col))
+    w = Window.partitionBy(query_id).orderBy(F.desc(score_col), F.asc(id_col))
     return (
-        pruned.withColumn("rank", F.row_number().over(w2).cast("long"))
+        scored.withColumn("rank", F.row_number().over(w).cast("long"))
         .filter(F.col("rank") <= k)
     )
 

@@ -719,9 +719,7 @@ FROM documents GROUP BY fingerprint
     "exact dedup by token-stream fingerprint (hash groupBy)",
 )
 def q_exact_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from fastembed_rs_spark.operators.fast_text import exact_dedup_fast
-
-    return exact_dedup_fast(t(spark, sf_dir, "documents"), "doc_id", "text")
+    return D.exact_dedup(t(spark, sf_dir, "documents"), "doc_id", "text")
 
 
 @q(

@@ -53,7 +53,8 @@ _STATE_SCHEMA = StructType([
 
 def _make_prune(k: int):
     """Stateless per-Arrow-batch top-k pre-prune (the streaming analogue of
-    ``_ranked_topk`` phase 1): any row in a query's global top-k is in that
+    the partial ``WindowGroupLimit`` Spark plans under ``_ranked_topk``'s
+    window in batch mode): any row in a query's global top-k is in that
     query's top-k of its own batch, so keeping k rows per (query, batch) is
     lossless while shrinking the stateful stage's shuffle input from
     O(batch·queries) to O(k·queries) per batch partition. Windows aren't

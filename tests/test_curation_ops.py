@@ -652,10 +652,6 @@ def test_minhash_band_curve_scurve_ordering_and_fixed_point(spark, catalog):
     most the 2^-16 tail, and every aggregate must equal a pure-Python
     replay of the integer fixed-point chain over the measured pairs."""
     from fastembed_rs_spark.operators import dedup as D
-    from fastembed_rs_spark.operators.fast_text import (
-        minhash_signatures_fast,
-        verify_candidates_fast,
-    )
 
     out = {(r["bands"], r["rows_per_band"]): r
            for r in catalog["minhash_band_curve"].spark(spark, SF).collect()}
@@ -671,11 +667,11 @@ def test_minhash_band_curve_scurve_ordering_and_fixed_point(spark, catalog):
     assert out[(16, 1)]["exp_missed_true_micro"] <= n_true * 16
 
     docs = spark.read.parquet(f"{SF}/documents.parquet")
-    sigs = minhash_signatures_fast(docs, "doc_id", "text", k_shingle=5)
+    sigs = D.minhash_signatures(docs, "doc_id", "text", k_shingle=5)
     cand = D.lsh_candidate_pairs(sigs, "doc_id", bands=4, rows_per_band=4)
     jms = [
         int(round(r["jaccard"] * 1_000_000))
-        for r in verify_candidates_fast(
+        for r in D.verify_candidates(
             cand, docs, "doc_id", "text", k_shingle=5, threshold=0.1
         ).collect()
     ]
@@ -893,10 +889,6 @@ def test_simhash_hamming_curve_monotone_and_anchored(spark, catalog):
     an independent recount of the measured pair set (every pair is within
     Hamming 32 of every other on a 32-bit fingerprint)."""
     from fastembed_rs_spark.operators import dedup as D
-    from fastembed_rs_spark.operators.fast_text import (
-        minhash_signatures_fast,
-        verify_candidates_fast,
-    )
     from fastembed_rs_spark.queries import t as tbl
 
     out = {r["h"]: r
@@ -917,9 +909,9 @@ def test_simhash_hamming_curve_monotone_and_anchored(spark, catalog):
             assert r["precision_permille"] == (
                 r["n_true_captured"] * 1000 // r["n_candidates"])
     docs = tbl(spark, SF, "documents")
-    sigs = minhash_signatures_fast(docs, "doc_id", "text", k_shingle=5)
+    sigs = D.minhash_signatures(docs, "doc_id", "text", k_shingle=5)
     cand = D.lsh_candidate_pairs(sigs, "doc_id", bands=4, rows_per_band=4)
-    pairs = verify_candidates_fast(
+    pairs = D.verify_candidates(
         cand, docs, "doc_id", "text", k_shingle=5, threshold=0.1)
     n_pairs = pairs.count()
     n_true = pairs.filter(F.col("jaccard") >= 0.5).count()

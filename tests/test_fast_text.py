@@ -1,14 +1,15 @@
-"""The NumPy fast-text kernels must be BIT-IDENTICAL to the Catalyst
-expression paths they replace — same rows, same values, including edge cases
-(empty docs, docs shorter than the shingle width, punctuation-only docs,
-non-ASCII text where Python/Java/DuckDB lower() and codepoints must agree)."""
+"""The NumPy fast-text kernels, and the public dedup operators that run on
+them, must be BIT-IDENTICAL to the Catalyst expressions they replace — same
+rows, same values, including edge cases (empty docs, docs shorter than the
+shingle width, punctuation-only docs, non-ASCII text where Python/Java/DuckDB
+lower() and codepoints must agree)."""
 
 from __future__ import annotations
 
 import pytest
 from pyspark.sql import functions as F
 
-from fastembed_rs_spark.functions.text import char_shingles, doc_fingerprint
+from fastembed_rs_spark.functions.text import HASH_MOD, char_shingles, doc_fingerprint
 from fastembed_rs_spark.operators import dedup as D
 from fastembed_rs_spark.operators import embed_hash as EH
 from fastembed_rs_spark.operators import fast_text as FT
@@ -47,9 +48,14 @@ def test_splade_coords_fast_matches_expression(spark, docs):
     assert _rows(fast) == _rows(slow)
 
 
-def test_minhash_signatures_fast_matches_expression(spark, docs):
-    slow = D.minhash_signatures(docs, "doc_id", "text", k_shingle=5)
-    fast = FT.minhash_signatures_fast(docs, "doc_id", "text", k_shingle=5)
+def test_minhash_signatures_matches_expression(spark, docs):
+    """Reference: explode the shingle-hash set, min of each affine hash."""
+    sh = docs.select("doc_id", F.explode(D.shingle_hashes("text", 5)).alias("sh"))
+    slow = sh.groupBy("doc_id").agg(*[
+        F.min((F.col("sh") * a + b) % HASH_MOD).alias(f"mh_{i}")
+        for i, (a, b) in enumerate(D.MINHASH_COEFFS)
+    ])
+    fast = D.minhash_signatures(docs, "doc_id", "text", k_shingle=5)
     assert _rows(fast) == _rows(slow)
 
 
@@ -69,12 +75,19 @@ def test_shingle_sets_fast_matches_expression(spark, docs):
     assert got == want
 
 
-def test_verify_candidates_fast_matches_expression(spark, docs):
+def test_verify_candidates_matches_expression(spark, docs):
+    """Reference: join both texts, exact ``jaccard_shingles`` per pair."""
     cand = spark.createDataFrame(
         [(0, 1), (0, 8), (2, 3), (4, 5), (6, 7)], ["id_a", "id_b"]
     )
-    slow = D.verify_candidates(cand, docs, "doc_id", "text", 5, threshold=0.0)
-    fast = FT.verify_candidates_fast(cand, docs, "doc_id", "text", 5, threshold=0.0)
+    slow = (
+        cand.join(docs.withColumnsRenamed({"doc_id": "id_a", "text": "ta"}), "id_a")
+        .join(docs.withColumnsRenamed({"doc_id": "id_b", "text": "tb"}), "id_b")
+        .select("id_a", "id_b",
+                F.round(D.jaccard_shingles(F.col("ta"), F.col("tb"), 5), 6)
+                .alias("jaccard"))
+    )
+    fast = D.verify_candidates(cand, docs, "doc_id", "text", 5, threshold=0.0)
     assert _rows(fast) == _rows(slow)
 
 
@@ -90,14 +103,15 @@ def test_simhash_fast_matches_expression(spark, docs):
 
 def test_minhash_bundle_fast_matches_standalone_kernels(spark, docs):
     """Every bundle column is value-identical to its standalone kernel:
-    mh_* (NULL rows <-> missing signature rows), shingles, simhash."""
+    mh_* (NULL rows <-> missing ``minhash_signatures`` rows), shingles,
+    simhash."""
     bundle = FT.minhash_bundle_fast(
         docs, "doc_id", "text", k_shingle=5, with_simhash=True
     )
     brows = {r["doc_id"]: r for r in bundle.collect()}
     n_h = len(D.MINHASH_COEFFS)
 
-    sig_rows = {r["doc_id"]: r for r in FT.minhash_signatures_fast(
+    sig_rows = {r["doc_id"]: r for r in D.minhash_signatures(
         docs, "doc_id", "text", k_shingle=5).collect()}
     for did, r in brows.items():
         if did in sig_rows:
@@ -115,9 +129,15 @@ def test_minhash_bundle_fast_matches_standalone_kernels(spark, docs):
     assert {d: r["simhash"] for d, r in brows.items()} == sh_rows
 
 
-def test_exact_dedup_fast_matches_expression(spark, docs):
-    slow = D.exact_dedup(docs, "doc_id", "text")
-    fast = FT.exact_dedup_fast(docs, "doc_id", "text")
+def test_exact_dedup_matches_expression(spark, docs):
+    """Reference: ``doc_fingerprint`` then groupBy / count / min id."""
+    slow = (
+        docs.select("doc_id", doc_fingerprint("text").alias("fingerprint"))
+        .groupBy("fingerprint")
+        .agg(F.count("*").cast("long").alias("n_docs"),
+             F.min("doc_id").alias("canonical_id"))
+    )
+    fast = D.exact_dedup(docs, "doc_id", "text")
     assert _rows(fast) == _rows(slow)
 
 

@@ -3,6 +3,8 @@ constructed near/far duplicates, sessionization on a hand-built event log."""
 
 from __future__ import annotations
 
+import re
+
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
@@ -43,6 +45,14 @@ def test_cosine_topk_matches_numpy(spark, emb):
             gvid, gscore = got[(qi, rank)]
             assert gvid == vid
             assert gscore == pytest.approx(score, abs=1e-9)
+    # one shuffle, keyed by the query alone, fed by a per-task partial
+    # WindowGroupLimit: no more than k rows per query leave a map task
+    final = out._jdf.queryExecution().executedPlan().toString()
+    final = final.split("== Initial Plan ==")[0]
+    keys = re.findall(r"Exchange hashpartitioning\(([^)]*)\)", final)
+    assert len(keys) == 1 and re.fullmatch(r"query_id#\d+L, \d+", keys[0]), final
+    below = final.split("Exchange hashpartitioning")[1]
+    assert re.search(r"WindowGroupLimit \[query_id#\d+L\], .*, 5, Partial", below), final
 
 
 def test_cosine_topk_fixed_dim_same_result(spark, emb):
@@ -71,15 +81,28 @@ def test_ivf_recall_vs_exact(spark, emb):
 
 
 def test_exact_dedup_groups(spark):
-    docs = spark.createDataFrame(
-        [(0, "Hello world"), (1, "hello,  WORLD!"), (2, "different entirely")],
-        ["doc_id", "text"],
-    )
+    """Texts with no tokens (NULL, empty, punctuation-only) share one
+    fingerprint-0 group, canonical = min id, exactly as the catalog's
+    DuckDB oracle SQL groups them."""
+    import duckdb
+    import pandas as pd
+
+    from fastembed_rs_spark.queries import QUERIES
+
+    data = [(0, "Hello world"), (1, "hello,  WORLD!"), (2, "different entirely"),
+            (3, None), (4, ""), (5, "!!!")]
+    docs = spark.createDataFrame(data, "doc_id long, text string")
     rows = D.exact_dedup(docs, "doc_id", "text").collect()
     groups = {r["fingerprint"]: (r["n_docs"], r["canonical_id"]) for r in rows}
-    assert len(groups) == 2
+    assert len(groups) == 3
     assert (2, 0) in groups.values()  # the two hello-worlds collapse to doc 0
     assert (1, 2) in groups.values()
+    assert groups[0] == (3, 3)
+
+    con = duckdb.connect()
+    con.register("documents", pd.DataFrame(data, columns=["doc_id", "text"]))
+    want = con.execute(QUERIES["exact_dedup"].oracle).fetchall()
+    assert sorted(tuple(r) for r in rows) == sorted(want)
 
 
 NEAR_A = "the quick brown fox jumps over the lazy dog and keeps running far away"

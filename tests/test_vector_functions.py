@@ -110,11 +110,9 @@ def test_fixed_dim_bit_identical_to_fold(spark):
         ).collect()
         for (a, b), fr, xr in zip(pairs, fold, fixed):
             if a is None:
-                # the fixed chains coalesce missing elements to 0.0, so a
-                # NULL vector scores as the zero vector (the DuckDB oracle's
-                # coalesce(list_sum(...), 0.0) does the same); the lambda
-                # folds return NULL
-                assert fr[:] == (None, None, None)
+                # a NULL vector scores as the zero vector on both paths, as
+                # in the DuckDB oracle's coalesce(list_sum(...), 0.0)
+                assert fr[:] == (0.0, 0.0, 0.0)
                 assert xr[:3] == (0.0, 0.0, 0.0) and xr[3:] == (None, None)
                 continue
             # exact, not approx: same fold order
