@@ -3,6 +3,10 @@ the dedup family's PAIRS (minhash/simhash/ngram/embedding near-dups) into
 CLUSTERS with one canonical representative, which is what a training-data
 dedup pipeline actually deletes against.
 
+Pair sets up to ``collect_threshold`` rows (10^6 by default — the usual
+case after dedup filtering) are collected and labelled by union-find on
+the driver; the distributed loop below labels larger ones.
+
 Algorithm: min-label propagation + pointer jumping. Every node starts
 labeled with itself; each hop every node takes the min label among itself
 and its neighbours (the symmetric edge set carries self-loops, so "itself"
@@ -44,7 +48,7 @@ def connected_components(
     dst: str = "id_b",
     max_iter: int = 25,
     hops_per_round: int = 3,
-    collect_threshold: int = 0,
+    collect_threshold: int = 1_000_000,
 ) -> DataFrame:
     """(node, component) for every node appearing in ``edges``; component =
     min node id in the connected component. Σcomp is the potential
@@ -60,13 +64,15 @@ def connected_components(
     a diameter-18 near-dup graph (9 → 5 rounds, 73 → 55 jobs vs the old
     2-hop no-jump round) and tiny dense graphs, with identical results.
 
-    ``collect_threshold`` > 0 enables the small-graph tier: if the edge
-    set (already materialized for the loop) has at most that many rows,
-    run union-find on the driver instead — a dedup pair set after quality
-    and exact-dedup filtering is typically tiny relative to the corpus,
-    and each distributed round costs several fixed-overhead jobs. 10^6
-    edges ≈ 16 MB driver memory; above the threshold the distributed loop
-    runs unchanged. Both tiers produce identical labels (pinned by test).
+    ``collect_threshold`` gates the small-graph driver tier, on by
+    default: if the raw pair set (already materialized for the loop) has
+    at most that many rows, it is collected and labelled by union-find on
+    the driver — a dedup pair set after quality and exact-dedup filtering
+    is typically tiny relative to the corpus, and each distributed round
+    costs several fixed-overhead jobs. The default 10^6 edges ≈ 16 MB of
+    driver memory; above it the distributed loop runs. ``0`` forces the
+    distributed loop at any size. Both tiers produce identical labels
+    (pinned by test), and both raise ``ValueError`` on a NULL node id.
     """
     # Integral ids only: min-label components AND the decimal Σcomp
     # convergence probe both need numeric ids — a string id would CAST to
@@ -99,6 +105,8 @@ def connected_components(
     # pair endpoints either way), so the sym shuffle is pure overhead here.
     if collect_threshold and e.count() <= collect_threshold:
         pair_rows = e.collect()
+        if any(r.a is None or r.b is None for r in pair_rows):
+            raise _null_node_error(src, dst)
         parent: dict = {}
 
         def find(x):
@@ -136,7 +144,13 @@ def connected_components(
         "comp", F.col("node")
     ).localCheckpoint(eager=False)
     pot = F.sum(F.col("comp").cast("decimal(38,0)"))
-    prev_sum = labels.agg(pot).collect()[0][0]
+    # the first probe also counts NULL nodes: a NULL endpoint would
+    # otherwise ride the loop as a `node = NULL` row with a neighbour's label
+    prev_sum, n_null = labels.agg(
+        pot, F.count(F.when(F.col("node").isNull(), 1))
+    ).collect()[0]
+    if n_null:
+        raise _null_node_error(src, dst)
 
     def _propagate(lab: DataFrame) -> DataFrame:
         # sym carries self-loops, so each node's own label flows through
@@ -179,6 +193,13 @@ def connected_components(
             break
         prev_sum = cur_sum
     return labels
+
+
+def _null_node_error(src: str, dst: str) -> ValueError:
+    return ValueError(
+        f"connected_components needs non-NULL node ids; edge column {src!r} "
+        f"or {dst!r} holds NULL — drop or fill NULL endpoints first"
+    )
 
 
 def component_summary(labels: DataFrame) -> DataFrame:

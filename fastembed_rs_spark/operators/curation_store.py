@@ -62,7 +62,6 @@ def build_curation_store(
     path: str,
     n_buckets: int = 32,
     generator: str = "",
-    collect_threshold: int = 0,
 ) -> dict:
     """Materialize ``pairs`` (id_a, id_b [, extra score columns]) and their
     connected-component labels at ``path``. Returns the manifest dict.
@@ -71,9 +70,7 @@ def build_curation_store(
     minhash-LSH verified, embedding near-dup, simhash...); ``generator``
     records which, for provenance. The pair plan executes exactly once —
     into the partitioned pairs write — and CC reads the WRITTEN pairs
-    back, so an expensive generator is never re-run. ``collect_threshold``
-    forwards to :func:`connected_components` (the small-graph driver tier;
-    0 = always distributed)."""
+    back, so an expensive generator is never re-run."""
     spark = pairs.sparkSession
     (
         pairs.withColumn(
@@ -85,10 +82,7 @@ def build_curation_store(
         .parquet(f"{path}/pairs")
     )
     stored_pairs = spark.read.parquet(f"{path}/pairs")
-    labels = connected_components(
-        stored_pairs.select("id_a", "id_b"),
-        collect_threshold=collect_threshold,
-    )
+    labels = connected_components(stored_pairs.select("id_a", "id_b"))
     (
         labels.withColumn(
             "pbucket", F.pmod(F.xxhash64(F.col("node")), F.lit(n_buckets))

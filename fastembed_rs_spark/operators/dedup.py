@@ -965,7 +965,6 @@ def keep_best_representative(
     id_col: str = "doc_id",
     score_col: str = "quality",
     labels: DataFrame | None = None,
-    collect_threshold: int = 0,
 ) -> DataFrame:
     """Cluster near-dup ``pairs`` and keep the highest-``score_col`` doc of
     every cluster — the curation step that decides WHICH duplicate survives.
@@ -993,12 +992,8 @@ def keep_best_representative(
     # consumers pay the pair+CC cost once, not once each; must be the CC
     # labels OF ``pairs`` (identical semantics either way — pinned by
     # tests/test_curation_store.py parity)
-    # ``collect_threshold`` forwards to connected_components' gated
-    # small-graph driver tier (0 = always distributed; identical labels)
     if labels is None:
-        labels = connected_components(
-            pairs.select("id_a", "id_b"), collect_threshold=collect_threshold
-        )
+        labels = connected_components(pairs.select("id_a", "id_b"))
     else:
         labels = labels.select("node", "comp")
     base = docs.select(id_col, score_col).join(

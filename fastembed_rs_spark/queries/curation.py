@@ -297,13 +297,7 @@ def q_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("score") >= _SEMDEDUP_TAU)
         .select("id_a", "id_b")
     )
-    # small-graph tier (same gate as corpus_curation): the within-bucket
-    # near-dup pair set is tiny after thresholding, so driver union-find
-    # beats several fixed-overhead distributed rounds; past the gate the
-    # distributed loop runs unchanged (identical labels either way)
-    cc = component_summary(
-        connected_components(pairs, collect_threshold=1_000_000)
-    )
+    cc = component_summary(connected_components(pairs))
     return cc.select(
         F.col("node").alias("vec_id"), "component", "cluster_size",
         (F.col("node") == F.col("component")).alias("is_canonical"),

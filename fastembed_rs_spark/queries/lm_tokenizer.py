@@ -517,12 +517,8 @@ def q_dedup_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
     # family's scale behavior instead of pinning the worst shape
     pairs = D.jaccard_pairs_adaptive(docs, "doc_id", "text", n=3, threshold=0.5)
     scored = _scored_docs(spark, sf_dir)
-    # small-graph CC tier (same gate as corpus_curation / semantic_dedup):
-    # the thresholded pair set is tiny; past the gate the distributed loop
-    # runs unchanged (identical labels either way)
     return D.keep_best_representative(
-        scored, pairs.select("id_a", "id_b"), "doc_id", "quality",
-        collect_threshold=1_000_000,
+        scored, pairs.select("id_a", "id_b"), "doc_id", "quality"
     )
 
 

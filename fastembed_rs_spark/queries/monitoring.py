@@ -186,13 +186,9 @@ def q_soft_dedup_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     edges = QUERIES["embedding_neardup"].spark(spark, sf_dir).select("id_a", "id_b")
-    # small-graph tier (same rationale + bound as corpus_curation): the
-    # post-threshold pair set is tiny relative to the corpus, driver
-    # union-find beats several fixed-overhead distributed rounds; above
-    # 10^6 edges the distributed loop runs unchanged, labels identical
-    cs = component_summary(
-        connected_components(edges, collect_threshold=1_000_000)
-    ).select(F.col("node").alias("vec_id"), "cluster_size")
+    cs = component_summary(connected_components(edges)).select(
+        F.col("node").alias("vec_id"), "cluster_size"
+    )
     emb = t(spark, sf_dir, "embeddings").select("vec_id", "label")
     w = emb.join(cs, "vec_id", "left").select(
         F.coalesce("label", F.lit("__none")).alias("label"),
@@ -281,9 +277,7 @@ def q_leakage_safe_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = jaccard_pairs_adaptive(
         docs, "doc_id", "text", n=3, threshold=0.5
     ).select("id_a", "id_b").localCheckpoint(eager=False)
-    # small-graph tier: see corpus_curation (bounded at 10^6 edges,
-    # distributed loop above, labels identical either way)
-    comp = connected_components(pairs, collect_threshold=1_000_000).select(
+    comp = connected_components(pairs).select(
         F.col("node").alias("doc_id"), F.col("comp").alias("component")
     )
     reps = docs.select("doc_id").join(comp, "doc_id", "left").select(
@@ -771,9 +765,7 @@ def q_duplicate_cluster_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = jaccard_pairs_adaptive(
         docs, "doc_id", "text", n=3, threshold=0.5
     ).select("id_a", "id_b")
-    # small-graph tier: see corpus_curation (bounded at 10^6 edges,
-    # distributed loop above, labels identical either way)
-    comp = connected_components(pairs, collect_threshold=1_000_000).select(
+    comp = connected_components(pairs).select(
         F.col("node").alias("doc_id"), F.col("comp").alias("component")
     )
     return (
@@ -2530,8 +2522,7 @@ def q_curation_store_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             docs, "doc_id", "text", n=3, threshold=0.5
         ).select("id_a", "id_b")
         manifest = build_curation_store(
-            pairs, path, generator="jaccard_adaptive n=3 t=0.5",
-            collect_threshold=1_000_000,
+            pairs, path, generator="jaccard_adaptive n=3 t=0.5"
         )
         store = load_curation_store(spark, path).prewarm()
         m = store.members()

@@ -468,7 +468,9 @@ def q_neardup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     edges = QUERIES["embedding_neardup"].spark(spark, sf_dir).select("id_a", "id_b")
-    return component_summary(connected_components(edges))
+    # the distributed loop, forced: the one catalog run of it that is
+    # checked against an oracle (the WITH RECURSIVE closure)
+    return component_summary(connected_components(edges, collect_threshold=0))
 
 
 # quality CTE shared by the curation pipeline oracle (same formula as
@@ -561,12 +563,7 @@ def q_corpus_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
         .localCheckpoint()  # feeds the pair join twice + the CC edge set
     )
     pairs = ngram_jaccard_pairs(exact_keep, "doc_id", "text", n=3, threshold=0.5)
-    # small-graph tier: the near-dup pair set post-filtering is tiny, so
-    # driver union-find beats several fixed-overhead distributed rounds
-    # (neardup_components keeps the distributed loop as the scale-path demo)
-    drops = connected_components(
-        pairs.select("id_a", "id_b"), collect_threshold=1_000_000
-    ).filter(
+    drops = connected_components(pairs.select("id_a", "id_b")).filter(
         F.col("node") != F.col("comp")
     ).select(F.col("node").alias("doc_id"), F.lit(1).alias("__dropped"))
 

@@ -315,5 +315,6 @@ def test_connected_components_rejects_string_ids(spark):
     from fastembed_rs_spark.operators.components import connected_components
 
     edges = spark.createDataFrame([("a", "b")], "id_a string, id_b string")
-    with pytest.raises(TypeError, match="integral node ids"):
-        connected_components(edges)
+    for threshold in (0, 10**6):
+        with pytest.raises(TypeError, match="integral node ids"):
+            connected_components(edges, collect_threshold=threshold)

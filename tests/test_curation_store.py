@@ -39,8 +39,7 @@ def text_store(spark):
         docs, "doc_id", "text", n=3, threshold=0.5
     ).select("id_a", "id_b")
     manifest = build_curation_store(
-        pairs, d, generator="jaccard_adaptive n=3 t=0.5",
-        collect_threshold=1_000_000,
+        pairs, d, generator="jaccard_adaptive n=3 t=0.5"
     )
     yield d, docs, manifest
     shutil.rmtree(d, ignore_errors=True)

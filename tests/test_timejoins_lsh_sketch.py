@@ -368,7 +368,10 @@ def test_connected_components_matches_union_find(spark):
     ]
     edges = [(a, b) for a, b in edges if a != b]
     df = spark.createDataFrame(edges, "id_a long, id_b long")
-    got = {r.node: r.comp for r in connected_components(df).collect()}
+    got = {
+        r.node: r.comp
+        for r in connected_components(df, collect_threshold=0).collect()
+    }
     ref = _union_find_reference(edges)
     # canonicalize reference labels to min member id per component
     comp_members = {}
@@ -377,7 +380,9 @@ def test_connected_components_matches_union_find(spark):
     ref_min = {n: min(comp_members[c]) for n, c in ref.items()}
     assert got == ref_min
 
-    summary = component_summary(connected_components(df)).collect()
+    summary = component_summary(
+        connected_components(df, collect_threshold=0)
+    ).collect()
     sizes = {}
     for r in summary:
         sizes.setdefault(r.component, set()).add(r.node)
@@ -386,15 +391,47 @@ def test_connected_components_matches_union_find(spark):
 
 
 def test_connected_components_chain_and_islands(spark):
-    # a path graph (worst diameter) plus two disjoint pairs
+    # a path graph (worst diameter) plus two disjoint pairs, through the
+    # distributed loop (0) and the driver tier (10**6)
     edges = [(i, i + 1) for i in range(10)] + [(100, 101), (200, 201)]
     df = spark.createDataFrame(edges, "id_a long, id_b long")
     from fastembed_rs_spark.operators.components import connected_components
 
-    got = {r.node: r.comp for r in connected_components(df).collect()}
-    assert all(got[i] == 0 for i in range(11))
-    assert got[100] == got[101] == 100
-    assert got[200] == got[201] == 200
+    for threshold in (0, 10**6):
+        got = {
+            r.node: r.comp
+            for r in connected_components(
+                df, collect_threshold=threshold
+            ).collect()
+        }
+        assert all(got[i] == 0 for i in range(11)), threshold
+        assert got[100] == got[101] == 100, threshold
+        assert got[200] == got[201] == 200, threshold
+
+
+def test_connected_components_default_is_driver_tier(spark):
+    # a small graph takes the driver tier by default: its labels come back
+    # as a local table, where the distributed loop returns a checkpointed
+    # RDD scan
+    from fastembed_rs_spark.operators.components import connected_components
+
+    df = spark.createDataFrame([(1, 2), (2, 3), (7, 8)], "id_a long, id_b long")
+    plan = connected_components(df)._jdf.queryExecution().executedPlan()
+    assert "LocalTableScan" in plan.toString()
+    assert "ExistingRDD" not in plan.toString()
+
+
+@pytest.mark.parametrize("threshold", [0, 10**6])
+def test_connected_components_null_ids_raise(spark, threshold):
+    # a NULL endpoint fails the same way in both tiers (the distributed
+    # loop used to return it as a labelled `node = NULL` row)
+    from fastembed_rs_spark.operators.components import connected_components
+
+    df = spark.createDataFrame(
+        [(1, 2), (2, None), (None, 5), (7, 8)], "id_a long, id_b long"
+    )
+    with pytest.raises(ValueError, match="edge column 'id_a' or 'id_b' holds NULL"):
+        connected_components(df, collect_threshold=threshold)
 
 
 # ---------------------------------------------------------------------------
@@ -464,7 +501,10 @@ def test_connected_components_collect_tier_matches_distributed(spark):
     edges = [(rng.randrange(150), rng.randrange(150)) for _ in range(120)]
     edges = [(a, b) for a, b in edges if a != b]
     df = spark.createDataFrame(edges, "id_a long, id_b long")
-    dist = {r.node: r.comp for r in connected_components(df).collect()}
+    dist = {
+        r.node: r.comp
+        for r in connected_components(df, collect_threshold=0).collect()
+    }
     fast = {
         r.node: r.comp
         for r in connected_components(df, collect_threshold=10**6).collect()
