@@ -1,4 +1,4 @@
-"""Benchmark harness: runs the headline catalog queries at
+"""Benchmark harness: runs every catalog query, in registration order, at
 ``$SPARK_GRAFT_SF_DIR`` (default /root/testdata/sf0.1) on
 ``local[$SPARK_GRAFT_CPUS]`` and prints ONE JSON line::
 
@@ -6,11 +6,10 @@
      "queries": {"q": sec, ...}, "sf": 0.1}
 
 Each query is materialized with the no-op sink (full computation, no
-driver collect). The headline set covers every engine capability:
-embedding generation (pure-SQL hashing + pandas-UDF model path),
-similarity search (brute force + IVF), dedup (minhash-LSH, simhash,
-embedding-cosine), text analytics, relational joins/aggs/windows and
-event sessionization.
+driver collect). The catalog covers every engine capability: embedding
+generation (pure-SQL hashing + pandas-UDF model path), similarity search
+(brute force + IVF), dedup (minhash-LSH, simhash, embedding-cosine), text
+analytics, relational joins/aggs/windows and event sessionization.
 """
 
 from __future__ import annotations
@@ -22,207 +21,6 @@ import sys
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
-
-HEADLINE = [
-    "shipmode_priority",
-    "minimum_cost_supplier",
-    "product_type_profit",
-    "video_frame_plan",
-    "important_stock_share",
-    "supplier_part_variety",
-    "promotion_stock_suppliers",
-    "late_delivery_suppliers",
-    "embedding_spectrum",
-    "table_profile",
-    "shard_balance_plan",
-    "vocab_divergence",
-    "simhash_hamming_curve",
-    "label_coherence",
-    "packing_efficiency_sweep",
-    "source_overlap_matrix",
-    "kmeans_distortion_ladder",
-    "ann_probe_sweep",
-    "pq_reconstruction_error",
-    "minhash_band_curve",
-    "cross_source_contamination",
-    "duplicate_cluster_profile",
-    "dedup_threshold_sweep",
-    "embedding_bucket_drift",
-    "tokenizer_fertility",
-    "soft_dedup_weights",
-    "leakage_safe_split",
-    "ann_recall_eval",
-    "split_leakage_report",
-    "quality_percent_rank",
-    "robust_value_outliers",
-    "event_transitions",
-    "join_size_estimate",
-    "graph_kcore",
-    "psi_drift",
-    "containment_neardup",
-    "grouped_linregress",
-    "reciprocal_nn",
-    "margin_mining",
-    "cohort_retention",
-    "training_triples",
-    "association_rules",
-    "label_propagation",
-    "label_propagation_bounded",
-    "graph_pagerank",
-    "graph_triangles",
-    "pareto_front",
-    "cluster_medoids",
-    "feature_correlations",
-    "scd2_history",
-    "fuzzy_vocab_join",
-    "events_anomaly_days",
-    "chi2_token_select",
-    "skew_report",
-    "minhash_estimate_eval",
-    "ann_rq_adc_topk",
-    "group_winsorize",
-    "stratified_split",
-    "snapshot_diff",
-    "bpe_apply",
-    "token_budget_mix",
-    "weighted_sample",
-    "dedup_keep_best",
-    "backoff_trigram_score",
-    "dense_hash_embed",
-    "splade_hash_sparse",
-    "embed_text_stub",
-    "cosine_topk",
-    "ann_ivf_topk",
-    "ann_pq_adc_topk",
-    "sparse_dot_topk",
-    "rerank_overlap",
-    "colbert_maxsim_topk",
-    "minhash_lsh_neardup",
-    "simhash",
-    "exact_dedup",
-    "embedding_neardup",
-    "lang_id",
-    "text_quality",
-    "pricing_summary",
-    "top_customers_by_nation",
-    "brand_revenue",
-    "events_sessionize",
-    "events_hourly",
-    "events_asof_join",
-    "events_range_join",
-    "ann_lsh_topk",
-    "bm25_topk",
-    "kmv_distinct",
-    "hll_distinct",
-    "neardup_components",
-    "price_histogram",
-    "heavy_hitters",
-    "deterministic_sample",
-    "small_quantity_revenue",
-    "large_order_customers",
-    "corpus_curation",
-    "binary_quant_topk",
-    "int8_quant_topk",
-    "mrl_truncate_topk",
-    "hybrid_rrf_topk",
-    "events_props_json",
-    "revenue_rollup",
-    "customers_without_orders",
-    "user_rolling_value",
-    "value_percentiles",
-    "brand_buyers_setops",
-    "orders_by_month",
-    "tfidf_top_terms",
-    "multimodal_probe",
-    "cms_heavy_estimate",
-    "stratified_sample",
-    "value_quartiles",
-    "clean_text",
-    "user_journey",
-    # round 3 additions — the headline set GROWS over rounds; compare
-    # per-query times against prior BENCH_r{N}.json, not the raw total
-    "value_percentiles_approx",
-    "unigram_surprisal",
-    "benchmark_decontam",
-    "pii_redact",
-    "repetition_signals",
-    "semantic_dedup",
-    "mmr_diversify",
-    "ann_ivf_trained",
-    "ann_pq_trained",
-    "ann_pq_rescore",
-    "ann_ivf_pq_topk",
-    "dsir_importance",
-    "sequence_packing",
-    "embedding_stats",
-    "embed_qwen_vl_stub",
-    "incremental_dedup",
-    "customers_with_returns",
-    "user_event_pivot",
-    "value_by_type_salted",
-    "hll_distinct_per_lang",
-    "revenue_cube",
-    "bloom_semijoin_revenue",
-    "order_items_array",
-    "chunk_documents",
-    "rag_passage_topk",
-    "chunk_documents_tokens",
-    "incremental_embed",
-    "order_rank_profile",
-    "retrieve_then_rerank",
-    "events_funnel",
-    # round 4 additions
-    "customer_order_distribution",
-    "sales_opportunity_segments",
-    "promo_revenue_share",
-    "order_priority_pending",
-    "chunk_exact_dedup",
-    "domain_mix_weights",
-    "token_vocab_coverage",
-    "value_percentiles_sampled",
-    "value_percentiles_sampled_by_type",
-    "bigram_lift",
-    "jaccard_prefix_neardup",
-    "daily_activity_reconcile",
-    "cosine_topk_filtered",
-    # full-catalog coverage: every queries() entry is benched
-    "dot_pairs",
-    "doc_fingerprint",
-    "ngram_jaccard_neardup",
-    "bpe_token_count",
-    "shipping_priority",
-    "local_supplier_volume",
-    "embed_sparse_stub",
-    "embed_bgem3_stub",
-    # round 5: pack_by_length variant measured against embed_text_stub;
-    # adaptive jaccard measured against the pinned prefix/inverted shapes
-    "embed_text_stub_packed",
-    "jaccard_adaptive_neardup",
-    "repeated_spans",
-    "cluster_balanced_sample",
-    "embedding_outliers",
-    "jl_project_topk",
-    "nation_trade_volume",
-    "promo_market_share",
-    "returned_items_top_customers",
-    "top_supplier_revenue",
-    "brand_bracket_revenue",
-    "embed_image_stub",
-    "crossmodal_similarity",
-    "rerank_model_stub",
-    # round 6 additions
-    "bpe_merge_step",
-    "bigram_surprisal",
-    "epoch_shuffle",
-    "quality_classifier",
-    # round 9 additions
-    "index_lifecycle_audit",
-    "index_repair_audit",
-    "index_retrain_compact_audit",
-    # round 10 addition
-    "curation_store_audit",
-]
-
 
 def mt_matmul_probe(pools: int = 3) -> float:
     """Just the 32-thread matmul wall-clock (the ``mt_matmul_s`` calib
@@ -439,12 +237,11 @@ def main() -> int:
     sf = float(m.group(1)) if m else -1.0
     calib = _calibrate()
 
-    from fastembed_rs_spark.queries import all_queries
+    from fastembed_rs_spark.queries import QUERIES
     from fastembed_rs_spark.session import get_spark
 
     spark = get_spark("bench")
     spark.sparkContext.setLogLevel("ERROR")
-    catalog = all_queries()
 
     # warm the JVM / codegen path once with a trivial plan
     spark.range(1000).selectExpr("sum(id)").collect()
@@ -470,22 +267,22 @@ def main() -> int:
     RUNS = int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "2"))
     subset_env = os.environ.get("SPARK_GRAFT_BENCH_QUERIES", "")
     subset = [q.strip() for q in subset_env.split(",") if q.strip()]
-    headline = [q for q in HEADLINE if q in subset] if subset else HEADLINE
-    unknown = sorted(set(subset) - set(HEADLINE))
+    names = [q for q in QUERIES if q in subset] if subset else list(QUERIES)
+    unknown = sorted(set(subset) - set(QUERIES))
     if unknown:
         # a typo'd targeted re-measurement must not "succeed" silently
         # with fewer (or zero) queries and feed an empty artifact into an
         # adjudication step
         print(
-            "ERROR: SPARK_GRAFT_BENCH_QUERIES entries not in HEADLINE: "
+            "ERROR: SPARK_GRAFT_BENCH_QUERIES entries not in the catalog: "
             + ", ".join(unknown),
             file=sys.stderr,
         )
         return 2
     timings: dict[str, float] = {}
     errors: dict[str, str] = {}
-    for name in headline:
-        spec = catalog[name]
+    for name in names:
+        spec = QUERIES[name]
         best = float("inf")
         try:
             for r in range(RUNS):

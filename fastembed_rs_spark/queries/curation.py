@@ -6,6 +6,7 @@ preserved by the sequential imports in queries/__init__.py.
 
 from __future__ import annotations
 
+from fastembed_rs_spark.operators.sketch import duck_hll_grouped
 from fastembed_rs_spark.queries._core import (
     DataFrame,
     EMB_DIM,
@@ -547,9 +548,15 @@ def q_mmr_diversify(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.select("query_id", "vec_id", "relevance", "objective", "mmr_rank")
 
 
+_LANG_TOKEN_HASH_ROWS = (
+    "SELECT lang, " + duck_token_hash("token") + " AS h FROM "
+    "(SELECT lang, unnest(" + duck_tokens("text") + ") AS token FROM documents)"
+)
+
+
 @q(
     "hll_distinct_per_lang",
-    None,  # filled in _fill_sketch_oracles (needs the sketch module)
+    duck_hll_grouped(_LANG_TOKEN_HASH_ROWS, key="lang", p=9),
     "per-group HLL: distinct-token estimate per language — the per-group "
     "sketch shape production metrics use. Register table is |groups| x 2^p "
     "rows max (map-side combined); merging across datasets stays a max().",

@@ -6,6 +6,7 @@ preserved by the sequential imports in queries/__init__.py.
 
 from __future__ import annotations
 
+from fastembed_rs_spark.operators.sketch import duck_cms
 from fastembed_rs_spark.queries._core import (
     DataFrame,
     F,
@@ -590,9 +591,15 @@ def q_multimodal_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+_CMS_TOKS = (
+    "SELECT token, " + duck_token_hash("token") + " AS h FROM "
+    "(SELECT unnest(" + duck_tokens("text") + ") AS token FROM documents)"
+)
+
+
 @q(
     "cms_heavy_estimate",
-    None,  # filled below (needs operator import at module load)
+    duck_cms(_CMS_TOKS, k=20),
     "Count-Min Sketch: d=4 x w=1024 integer counter table over all tokens, "
     "point estimates for the exact top-20 tokens (cms_n >= true_n always; "
     "the sketch shuffle is O(d*w), not O(distinct tokens))",

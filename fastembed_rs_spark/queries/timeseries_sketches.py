@@ -6,6 +6,7 @@ preserved by the sequential imports in queries/__init__.py.
 
 from __future__ import annotations
 
+from fastembed_rs_spark.operators.sketch import duck_hll, duck_kmv
 from fastembed_rs_spark.queries._core import (
     DataFrame,
     EH,
@@ -237,7 +238,7 @@ _TOKEN_HASH_ROWS = (
 
 @q(
     "kmv_distinct",
-    None,  # filled below (needs operator import at module load)
+    duck_kmv(_TOKEN_HASH_ROWS, k=256),
     "KMV distinct-token sketch: 256 minimum hash values -> estimate "
     "(per-partition top-k, no full shuffle of the distinct set)",
 )
@@ -252,7 +253,7 @@ def q_kmv_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @q(
     "hll_distinct",
-    None,  # filled below
+    duck_hll(_TOKEN_HASH_ROWS, p=9),
     "HLL-style distinct-token sketch: 512 integer registers, exact integer "
     "harmonic sum (order-independent), linear-counting small-range path",
 )

@@ -3,11 +3,13 @@
 The driver's correctness gate only covers the first ~50 entries of
 ``__spark_entry__.queries()`` per round, so ``all_queries()`` ordering is
 the coverage lever (VERDICT.md r3 §"What's wrong" 1). Rotation is
-AUTOMATIC: never-driver-checked queries order first, then ascending by
-the last round that checked them (from the committed CORRECTNESS_r*.json
-artifacts), with the static ``_DRIVER_PRIORITY`` snapshot as the
-no-artifacts fallback. These tests pin the rotation law, the fallback,
-catalog preservation, and the ``__spark_entry__`` adapters.
+AUTOMATIC: ``_CHANGED_THIS_ROUND`` queries first, then never-driver-checked
+queries, then ascending by the last round that checked them (from the
+committed CORRECTNESS_r*.json artifacts); ties keep registration order,
+which is also the whole order after the changed queries when no artifacts
+are readable. These tests pin the rotation law, the no-artifacts order,
+the one hand-kept list, catalog preservation, and the ``__spark_entry__``
+adapters.
 """
 
 from __future__ import annotations
@@ -45,17 +47,15 @@ def _checked_rounds() -> dict[str, int]:
 
 
 def test_rotation_orders_least_recently_checked_first():
-    from fastembed_rs_spark.queries import all_queries
-
-    from fastembed_rs_spark.queries import _CHANGED_THIS_ROUND
+    import fastembed_rs_spark.queries as Q
 
     last = _checked_rounds()
-    names = list(all_queries().keys())
-    if not last:  # fresh clone: fallback covered by the test below
+    names = list(Q.all_queries().keys())
+    if not last:  # fresh clone: covered by the no-artifacts test below
         return
     # changed-this-round queries jump the queue (key -3): the driver must
     # re-verify an edited query/oracle in the same round it changed
-    for n in _CHANGED_THIS_ROUND:
+    for n in Q._CHANGED_THIS_ROUND:
         last[n] = -3
     seen_rounds = [last.get(n, -2) for n in names]
     # the rotation law: rotation keys are non-decreasing down the dict
@@ -68,32 +68,26 @@ def test_rotation_orders_least_recently_checked_first():
         assert all(r in (-3, -2) for r in seen_rounds[:first_checked])
 
 
-def test_fallback_uses_static_priority(monkeypatch):
+def test_no_artifacts_orders_changed_then_registration(monkeypatch):
+    """A fresh clone (no readable CORRECTNESS artifacts) still puts the
+    changed-this-round queries first; everything keeps registration order."""
     import fastembed_rs_spark.queries as Q
 
     monkeypatch.setattr(Q, "_last_driver_round", lambda: {})
     names = list(Q.all_queries().keys())
-    assert names[: len(Q._DRIVER_PRIORITY)] == Q._DRIVER_PRIORITY
+    changed = set(Q._CHANGED_THIS_ROUND)
+    registered = list(Q.QUERIES)
+    head = [n for n in registered if n in changed]
+    assert names == head + [n for n in registered if n not in changed]
 
 
-def test_priority_snapshot_names_resolve():
-    from fastembed_rs_spark.queries import _DRIVER_PRIORITY, QUERIES
+def test_changed_this_round_names_resolve():
+    import fastembed_rs_spark.queries as Q
 
-    missing = [n for n in _DRIVER_PRIORITY if n not in QUERIES]
-    assert not missing, f"_DRIVER_PRIORITY has stale names: {missing}"
-    assert len(set(_DRIVER_PRIORITY)) == len(_DRIVER_PRIORITY)
-
-
-def test_priority_snapshot_covers_never_checked():
-    """The fallback snapshot must include every query with no driver row in
-    any committed artifact — otherwise a fresh clone would push exactly the
-    never-verified queries out of the driver's window."""
-    from fastembed_rs_spark.queries import _DRIVER_PRIORITY, QUERIES
-
-    last = _checked_rounds()
-    never = [n for n in QUERIES if n not in last]
-    missing = [n for n in never if n not in _DRIVER_PRIORITY]
-    assert not missing, f"add to _DRIVER_PRIORITY: {missing}"
+    changed = Q._CHANGED_THIS_ROUND
+    missing = [n for n in changed if n not in Q.QUERIES]
+    assert not missing, f"_CHANGED_THIS_ROUND has stale names: {missing}"
+    assert len(set(changed)) == len(changed)
 
 
 def test_reorder_preserves_catalog():
@@ -104,16 +98,6 @@ def test_reorder_preserves_catalog():
     assert len(ordered) == len(QUERIES)
     for name, spec in ordered.items():
         assert spec is QUERIES[name]
-
-
-def test_bench_headline_covers_full_catalog():
-    """Every catalog query is benched (and bench never names a dead query),
-    so a new operator can't silently skip the perf feedback loop."""
-    import bench
-    from fastembed_rs_spark.queries import all_queries
-
-    assert set(bench.HEADLINE) == set(all_queries())
-    assert len(bench.HEADLINE) == len(set(bench.HEADLINE))
 
 
 def test_entry_adapters_match_catalog():

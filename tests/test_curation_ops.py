@@ -157,7 +157,7 @@ def test_keep_best_representative_semantics(spark):
 def test_token_budget_mix_is_greedy_quality_prefix(spark, catalog):
     """Kept docs per source are exactly the best-quality-first prefix whose
     pre-doc cumulative token count is under the budget."""
-    from fastembed_rs_spark.queries import _MIX_BUDGET, _scored_docs
+    from fastembed_rs_spark.queries.lm_tokenizer import _MIX_BUDGET, _scored_docs
 
     kept = catalog["token_budget_mix"].spark(spark, SF).collect()
     scored = _scored_docs(spark, SF).collect()
@@ -183,7 +183,7 @@ def test_token_budget_mix_is_greedy_quality_prefix(spark, catalog):
 def test_weighted_sample_prefers_heavy_docs(spark, catalog):
     """Exactly k ranked rows, deterministic across runs, and the
     quality-weighted sample's mean quality exceeds the corpus mean."""
-    from fastembed_rs_spark.queries import _WS_K, _scored_docs
+    from fastembed_rs_spark.queries.lm_tokenizer import _WS_K, _scored_docs
 
     out = catalog["weighted_sample"].spark(spark, SF).collect()
     assert sorted(r["rank"] for r in out) == list(range(1, _WS_K + 1))
@@ -213,8 +213,9 @@ def test_backoff_score_held_out_split(spark, catalog):
 def test_snapshot_diff_classes_partition_the_keyspace(spark, catalog):
     """Class counts must match the mutation rules exactly, and the four
     classes partition old ∪ new."""
-    from fastembed_rs_spark.queries import (
-        _DIFF_ADD, _DIFF_CHG, _DIFF_DEL, t as load,
+    from fastembed_rs_spark.queries import t as load
+    from fastembed_rs_spark.queries.lm_tokenizer import (
+        _DIFF_ADD, _DIFF_CHG, _DIFF_DEL,
     )
 
     out = {r["change_class"]: r for r in
@@ -235,7 +236,7 @@ def test_snapshot_diff_classes_partition_the_keyspace(spark, catalog):
 def test_bpe_apply_matches_reference_merge_walk(spark, catalog):
     """Piece counts equal a pure-Python replay of the rank-ordered merge
     walk (Sennrich apply) on a sample of docs."""
-    from fastembed_rs_spark.queries import _BPE_MERGES
+    from fastembed_rs_spark.queries.lm_tokenizer import _BPE_MERGES
     import re as _re
 
     def pieces(word: str) -> int:
@@ -810,7 +811,7 @@ def test_shard_balance_plan_replays_snake_placement(spark, catalog):
     permille loads sum to ~S*1000, and the snake must balance at least as
     well as naive round-robin dealing on the same sorted order."""
     from fastembed_rs_spark.functions.text import tokens as tok_expr
-    from fastembed_rs_spark.queries import _N_SHARDS as S
+    from fastembed_rs_spark.queries.monitoring import _N_SHARDS as S
 
     out = {r["shard"]: r
            for r in catalog["shard_balance_plan"].spark(spark, SF).collect()}

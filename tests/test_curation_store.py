@@ -112,7 +112,8 @@ def test_leakage_safe_split_parity(spark, text_store):
 
 
 def test_keep_best_parity(spark, text_store):
-    from fastembed_rs_spark.queries import QUERIES, _scored_docs
+    from fastembed_rs_spark.queries import QUERIES
+    from fastembed_rs_spark.queries.lm_tokenizer import _scored_docs
 
     d, _, _ = text_store
     store = load_curation_store(spark, d)

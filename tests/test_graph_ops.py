@@ -192,7 +192,8 @@ def test_feature_correlations_match_numpy(spark):
     import numpy as np
 
     from fastembed_rs_spark.operators.fast_text import text_stat_counts_fast
-    from fastembed_rs_spark.queries import _CORR_FEATS, QUERIES, t
+    from fastembed_rs_spark.queries import QUERIES, t
+    from fastembed_rs_spark.queries.graph_mining import _CORR_FEATS
 
     out = {
         (r["feature_a"], r["feature_b"]): r["pearson_r"]

@@ -179,7 +179,7 @@ def test_sessionize_semantics(spark):
         (5, 2, 0 * ns),                                         # user 2: one event
     ]
     df = spark.createDataFrame(events, ["event_id", "user_id", "ts"])
-    from fastembed_rs_spark.queries import q_events_sessionize  # noqa: F401  (shape reference)
+    from fastembed_rs_spark.queries.relational import q_events_sessionize  # noqa: F401  (shape reference)
     from pyspark.sql import Window
 
     wo = Window.partitionBy("user_id").orderBy("ts", "event_id")

@@ -256,7 +256,7 @@ def test_important_stock_share_replays_q11(spark, catalog):
     """Row set must equal a pure-Python Q11 replay over the synthesized
     partsupp, every kept part must clear the scale-free 1/10000 filter,
     and shares must be exact integer per-100k of the regional total."""
-    from fastembed_rs_spark.queries import _Q11_NATIONS
+    from fastembed_rs_spark.queries.tpch_synth import _Q11_NATIONS
 
     out = {r["ps_partkey"]: r
            for r in catalog["important_stock_share"].spark(spark, SF).collect()}
@@ -281,7 +281,7 @@ def test_important_stock_share_replays_q11(spark, catalog):
 def test_supplier_part_variety_counts_clean_suppliers(spark, catalog):
     """Counts must equal a Python set replay and suppliers in bad standing
     must never contribute (re-counting WITH them must weakly increase)."""
-    from fastembed_rs_spark.queries import _Q16_SIZES
+    from fastembed_rs_spark.queries.tpch_synth import _Q16_SIZES
 
     out = {(r["p_brand"], r["p_type"], r["p_size"]): r["supplier_cnt"]
            for r in catalog["supplier_part_variety"].spark(spark, SF).collect()}
@@ -375,7 +375,7 @@ def test_embedding_spectrum_matches_eigensolver(spark, catalog):
     permille of the two reported numbers."""
     import numpy as np
 
-    from fastembed_rs_spark.queries import _SPECTRUM_ITERS
+    from fastembed_rs_spark.queries.tpch_synth import _SPECTRUM_ITERS
 
     row = catalog["embedding_spectrum"].spark(spark, SF).collect()[0]
     emb = spark.read.parquet(f"{SF}/embeddings.parquet").collect()

@@ -1,6 +1,7 @@
-"""Regenerate PLANS.md: the executed physical plan of each headline query at
-sf0.01, so plan quality (pushdown, pruning, broadcasts, partial aggregation,
-codegen coverage) is reviewable without running Spark.
+"""Regenerate PLANS.md: the executed physical plan of each catalog query at
+sf0.01, in registration order, so plan quality (pushdown, pruning,
+broadcasts, partial aggregation, codegen coverage) is reviewable without
+running Spark.
 
 Usage: python tools/dump_plans.py [sf_dir]
 """
@@ -12,19 +13,16 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from bench import HEADLINE  # single source of truth for the headline set
-
 
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
-    from fastembed_rs_spark.queries import all_queries
+    from fastembed_rs_spark.queries import QUERIES
     from fastembed_rs_spark.session import get_spark
 
     spark = get_spark("plans")
     spark.sparkContext.setLogLevel("ERROR")
-    catalog = all_queries()
     out = [
-        "# PLANS — executed physical plans of the headline queries",
+        "# PLANS — executed physical plans of the catalog queries",
         "",
         f"Generated by `python tools/dump_plans.py {sf_dir}`. Things to check",
         "per plan: `PushedFilters` reaching the scan, `ReadSchema` pruned to",
@@ -34,8 +32,8 @@ def main() -> int:
         "row-group file.",
         "",
     ]
-    for name in HEADLINE:
-        df = catalog[name].spark(spark, sf_dir)
+    for name, spec in QUERIES.items():
+        df = spec.spark(spark, sf_dir)
         plan = df._jdf.queryExecution().executedPlan().toString()
         # keep the tree + scan details, truncate giant expression dumps
         lines = []

@@ -1,4 +1,4 @@
-"""Measure how each headline query's runtime scales with data volume and
+"""Measure how each catalog query's runtime scales with data volume and
 write SCALING.md: wall time at sf0.001 / sf0.01 / sf0.1 plus the observed
 runtime ratio per 10x data step.
 
@@ -24,18 +24,15 @@ SFS = ["/root/testdata/sf0.001", "/root/testdata/sf0.01", "/root/testdata/sf0.1"
 
 
 def main() -> int:
-    from bench import HEADLINE
-    from fastembed_rs_spark.queries import all_queries
+    from fastembed_rs_spark.queries import QUERIES
     from fastembed_rs_spark.session import get_spark
 
     spark = get_spark("scaling")
     spark.sparkContext.setLogLevel("ERROR")
-    catalog = all_queries()
     spark.range(1000).selectExpr("sum(id)").collect()
 
     results: dict[str, list[float]] = {}
-    for name in HEADLINE:
-        spec = catalog[name]
+    for name, spec in QUERIES.items():
         times = []
         for sf_dir in SFS:
             best = float("inf")
@@ -48,7 +45,7 @@ def main() -> int:
         print(f"# {name}: " + " ".join(f"{t:.2f}" for t in times), file=sys.stderr)
 
     lines = [
-        "# SCALING — headline query runtime vs data volume",
+        "# SCALING — catalog query runtime vs data volume",
         "",
         "Wall seconds (min of 2 runs, noop sink, warm session) per scale",
         "factor; `x/10x` = runtime ratio for the last 10x data step",
