@@ -356,10 +356,11 @@ def main() -> int:
 def _next_round(repo_dir: str) -> int:
     """Infer the current round: 1 + the highest driver-written
     ``BENCH_r{N}.json`` (the driver records round N's bench AFTER the round,
-    so during round N only r1..N-1 exist)."""
+    so during round N only r1..N-1 exist) or local ``BENCH_LOCAL_r{N}.json``
+    side file, so a local run never overwrites a committed side file."""
     rounds = [0]
     for fn in os.listdir(repo_dir):
-        m = re.fullmatch(r"BENCH_r(\d+)\.json", fn)
+        m = re.fullmatch(r"BENCH_(?:LOCAL_)?r(\d+)\.json", fn)
         if m:
             rounds.append(int(m.group(1)))
     return max(rounds) + 1

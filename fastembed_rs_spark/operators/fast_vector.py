@@ -1,97 +1,174 @@
-"""Arrow-batched NumPy kernel for corpus × small-matrix cosine scoring —
+"""Arrow-batched NumPy kernels for corpus × small-matrix cosine scoring —
 the vector-math sibling of fast_text.py's hash kernels.
 
-Used by the IVF assignment path: scoring every corpus vector against a
-small broadcastable set (centroids) is `rows × set` interpreted lambda
-evaluations on the expression path (~5M fold steps at sf0.1 — the
-dominant cost of ann_ivf_topk). The kernel vectorizes ACROSS rows while
-looping dims/centroids, so each row's arithmetic happens in the exact
-left-fold order of the expression path (functions/vector.py::dot /
+Used by the IVF assignment path and by both top-k operators
+(operators/topk.py): scoring every corpus vector against a small
+broadcastable set (centroids, a query batch) is `rows × set` interpreted
+lambda evaluations on the expression path. The kernels vectorize ACROSS
+rows while looping dims/targets, so each row's arithmetic happens in the
+exact left-fold order of the expression path (functions/vector.py::dot /
 l2_norm) and the emitted raw doubles are bit-identical.
 
 Parity contract (same argument as fast_text.py):
 - float32 -> float64 casts are exact; each mul/add is one correctly-
   rounded IEEE op in the same sequence as the Catalyst fold.
+- dot over the common prefix of the two vectors, norms over each full
+  vector (src/similarity.rs:14); a NULL vector scores as the zero vector.
 - zero-norm guard: score = 0.0 when either norm is 0 (reference
   semantics, src/similarity.rs:22-25).
 - NO rounding in the kernel: numpy.round is banker's-on-binary, Spark's
   F.round is HALF_UP-on-decimal — callers round Spark-side, and ONLY
   then rank/argmax, so tie semantics match the DuckDB oracle.
+- a NaN score leaves mapInPandas as NULL (Arrow's pandas conversion
+  masks NaN); callers that rank NaN restore it.
 
-Scale: the centroid set is collected to the driver and shipped in the
-closure — valid precisely because IVF/k-means centroid sets are tiny by
-construction (k ≤ thousands); the corpus streams through mapInPandas
-without a shuffle.
+Scale: the target set is collected to the driver and shipped in the
+closure — valid precisely because IVF/k-means centroid sets and query
+batches are tiny by construction (k ≤ thousands); the corpus streams
+through mapInPandas without a shuffle.
 """
 
 from __future__ import annotations
 
-from typing import Iterator, Sequence
+from typing import Iterator, Mapping, Sequence
 
 from pyspark.sql import DataFrame
+
+
+def _cosine_fold():
+    """(norms, length_groups, scores): the kernel's exact left folds.
+    Built as closures so cloudpickle ships them by value and a Python
+    worker scores without importing this package."""
+    import numpy as np
+
+    def norms(V):
+        """Row L2 norms, exact left fold across dims from 0.0."""
+        acc = np.zeros(len(V), dtype=np.float64)
+        for j in range(V.shape[1]):
+            acc = acc + V[:, j] * V[:, j]
+        return np.sqrt(acc)
+
+    def length_groups(cells):
+        """(row positions, float64 matrix) per distinct vector length, so
+        a batch with NULL (length 0) or ragged vectors still scores in
+        whole-column ops; one group when every row has the same length."""
+        lens = np.fromiter(
+            (0 if c is None else len(c) for c in cells), dtype=np.int64,
+            count=len(cells),
+        )
+        for length in np.unique(lens):
+            pos = np.flatnonzero(lens == length)
+            if length == 0:
+                yield pos, np.zeros((len(pos), 0), dtype=np.float64)
+            else:
+                yield pos, np.stack([cells[p] for p in pos]).astype(np.float64)
+
+    def scores(V, tvecs, tnorms, which):
+        """(rows, len(which)) raw cosines of ``V`` against targets ``which``."""
+        n, dim = V.shape
+        vnorm = norms(V)
+        out = np.empty((n, len(which)), dtype=np.float64)
+        with np.errstate(invalid="ignore"):  # inf components score NaN
+            for col, ti in enumerate(which):
+                tv, tn = tvecs[ti], tnorms[ti]
+                acc = np.zeros(n, dtype=np.float64)
+                for j in range(min(dim, len(tv))):
+                    acc = acc + V[:, j] * tv[j]
+                denom = vnorm * tn
+                out[:, col] = np.where(
+                    (vnorm == 0.0) | (tn == 0.0), 0.0,
+                    acc / np.where(denom == 0.0, 1.0, denom),
+                )
+        return out
+
+    return norms, length_groups, scores
+
+
+def _targets(targets: Sequence[tuple[int, Sequence[float] | None]]):
+    """Driver-side target set: (ids int64, float64 vectors, fold norms)."""
+    import numpy as np
+
+    norms = _cosine_fold()[0]
+    vecs = [
+        np.asarray([] if t[1] is None else t[1], dtype=np.float64)
+        for t in targets
+    ]
+    return (
+        np.asarray([int(t[0]) for t in targets], dtype=np.int64),
+        vecs,
+        [float(norms(tv[None, :])[0]) for tv in vecs],
+    )
+
+
+def cosine_matrix(
+    vecs: Sequence[Sequence[float] | None],
+    targets: Sequence[tuple[int, Sequence[float] | None]],
+):
+    """Driver-side (len(vecs), len(targets)) raw cosines with the kernel's
+    fold — for small sets that never leave the driver (IVF probe choice)."""
+    import numpy as np
+
+    _, length_groups, scores = _cosine_fold()
+    _, tvecs, tnorms = _targets(targets)
+    out = np.empty((len(vecs), len(targets)), dtype=np.float64)
+    every = range(len(targets))
+    for pos, V in length_groups(vecs):
+        out[pos] = scores(V, tvecs, tnorms, every)
+    return out
 
 
 def pairwise_cosine_fast(
     df: DataFrame,
     id_col: str,
     vec_col: str,
-    targets: Sequence[tuple[int, Sequence[float]]],
+    targets: Sequence[tuple[int, Sequence[float] | None]],
     target_id_name: str = "centroid_id",
     score_name: str = "score",
+    bucket_col: str | None = None,
+    probes: Mapping[int, Sequence[int]] | None = None,
 ) -> DataFrame:
-    """(id_col, target_id, raw cosine score) for every (row, target) pair.
+    """(id_col, target_id long, raw cosine score) for every (row, target)
+    pair.
 
     ``targets`` = [(target_id, vector), ...] — small, driver-side.
+    With ``bucket_col``, a row meets only the targets that ``probes``
+    lists for its bucket value (indexes into ``targets``) — the IVF
+    candidate scoring, without a probe join.
     Emits RAW doubles; round Spark-side before any ranking.
     """
-    import numpy as np
-
     id_type = df.schema[id_col].dataType.simpleString()
     schema = f"{id_col} {id_type}, {target_id_name} long, {score_name} double"
-    tids = [int(t[0]) for t in targets]
-    tvecs = [np.asarray(t[1], dtype=np.float64) for t in targets]
-    # centroid norms: same left fold as l2_norm over each centroid vector
-    tnorms = []
-    for tv in tvecs:
-        acc = 0.0
-        for x in tv:
-            acc = acc + x * x
-        tnorms.append(float(np.sqrt(acc)))
-    src = df.select(id_col, vec_col)
+    _, length_groups, scores = _cosine_fold()
+    tids, tvecs, tnorms = _targets(targets)
+    every = list(range(len(targets)))
+    src = df.select(id_col, vec_col, *([bucket_col] if bucket_col else []))
 
     def gen(batches: Iterator) -> Iterator:
+        import numpy as np
         import pandas as pd
 
         for pdf in batches:
             if not len(pdf):
                 continue
-            V = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-            n, dim = V.shape
-            # row norms, exact left fold across dims
-            nacc = np.zeros(n, dtype=np.float64)
-            for j in range(dim):
-                nacc = nacc + V[:, j] * V[:, j]
-            vnorm = np.sqrt(nacc)
             ids = pdf[id_col].to_numpy()
-            t_cnt = len(tids)
-            out_scores = np.empty(n * t_cnt, dtype=np.float64)
-            for ti, (tv, tn) in enumerate(zip(tvecs, tnorms)):
-                d = min(dim, len(tv))
-                acc = np.zeros(n, dtype=np.float64)
-                for j in range(d):
-                    acc = acc + V[:, j] * tv[j]
-                denom = vnorm * tn
-                score = np.where(
-                    (vnorm == 0.0) | (tn == 0.0), 0.0, acc / np.where(denom == 0.0, 1.0, denom)
-                )
-                out_scores[ti::t_cnt] = score
-            yield pd.DataFrame(
-                {
-                    id_col: ids.repeat(t_cnt),
-                    target_id_name: np.tile(np.asarray(tids, dtype=np.int64), n),
-                    score_name: out_scores,
-                }
-            )
+            cells = pdf[vec_col].to_numpy()
+            if bucket_col is None:
+                plan = [(np.arange(len(pdf)), every)]
+            else:
+                buckets = pdf[bucket_col].to_numpy()
+                plan = [
+                    (np.flatnonzero(buckets == b), probes.get(int(b), []))
+                    for b in np.unique(buckets)
+                ]
+            for rows, which in plan:
+                if not which:
+                    continue
+                for pos, V in length_groups(cells[rows]):
+                    yield pd.DataFrame({
+                        id_col: ids[rows[pos]].repeat(len(which)),
+                        target_id_name: np.tile(tids[which], len(pos)),
+                        score_name: scores(V, tvecs, tnorms, which).ravel(),
+                    })
 
     return src.mapInPandas(gen, schema=schema)
 
@@ -341,16 +418,9 @@ def lloyd_assign_partials_fast(
     one tiny exchange: at 100 TB each Lloyd's iteration moves k×dim×tasks
     doubles instead of re-shuffling the corpus twice.
     """
-    import numpy as np
-
-    tids = np.asarray([int(t[0]) for t in targets], dtype=np.int64)
-    tvecs = [np.asarray(t[1], dtype=np.float64) for t in targets]
-    tnorms = []
-    for tv in tvecs:
-        acc = 0.0
-        for x in tv:
-            acc = acc + x * x
-        tnorms.append(float(np.sqrt(acc)))
+    scores = _cosine_fold()[2]
+    tids, tvecs, tnorms = _targets(targets)
+    every = range(len(targets))
     # contiguous per-config blocks for the grouped argmax
     if stride is None:
         blocks = [(0, len(tids))]
@@ -364,35 +434,19 @@ def lloyd_assign_partials_fast(
     src = df.select(id_col, vec_col)
 
     def gen(batches: Iterator) -> Iterator:
+        import numpy as np
         import pandas as pd
 
-        t_cnt = len(tids)
         sums: dict[int, np.ndarray] = {}
         counts: dict[int, int] = {}
         for pdf in batches:
             if not len(pdf):
                 continue
             V = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-            n, dim = V.shape
-            nacc = np.zeros(n, dtype=np.float64)
-            for j in range(dim):
-                nacc = nacc + V[:, j] * V[:, j]
-            vnorm = np.sqrt(nacc)
-            scores = np.empty((n, t_cnt), dtype=np.float64)
-            for ti, (tv, tn) in enumerate(zip(tvecs, tnorms)):
-                d = min(dim, len(tv))
-                acc = np.zeros(n, dtype=np.float64)
-                for j in range(d):
-                    acc = acc + V[:, j] * tv[j]
-                denom = vnorm * tn
-                scores[:, ti] = np.where(
-                    (vnorm == 0.0) | (tn == 0.0),
-                    0.0,
-                    acc / np.where(denom == 0.0, 1.0, denom),
-                )
+            S = scores(V, tvecs, tnorms, every)
             for lo, hi in blocks:
                 # first max = lowest target id (ids ascend within a block)
-                choice = lo + np.argmax(scores[:, lo:hi], axis=1)
+                choice = lo + np.argmax(S[:, lo:hi], axis=1)
                 for ti in np.unique(choice):
                     members = V[choice == ti]
                     tid = int(tids[ti])

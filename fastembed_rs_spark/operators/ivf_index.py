@@ -10,13 +10,12 @@ serving corpus. This module persists the trained index as plain parquet:
     <path>/manifest/    one row: k, dim, iters, seed, n_vectors
 
 and queries it with the existing ``ivf_top_k`` algebra. Because the corpus
-is hive-partitioned by ``centroid_id`` and the probe table joins on that
-column from a broadcast side, Catalyst injects **dynamic partition
-pruning** into the scan (`PartitionFilters: [dynamicpruning#...]`) — the
-query physically reads only the ``nprobe`` bucket directories per query
-set, never the whole index. At 100 TB that is the difference between an
-ANN lookup and a full-corpus scan; pinned by
-``tests/test_ivf_index.py::test_query_scan_is_dynamically_pruned``.
+is hive-partitioned by ``centroid_id`` and ``ivf_top_k`` picks the probed
+buckets on the driver, the scan carries a static ``centroid_id IN (...)``
+partition filter — the query physically reads only the probed bucket
+directories, never the whole index. At 100 TB that is the difference
+between an ANN lookup and a full-corpus scan; pinned by
+``tests/test_ivf_index.py::test_query_scan_reads_only_probed_buckets``.
 
 The reference keeps its entire corpus in memory and brute-forces it
 (`/root/reference/src/similarity.rs:31-40`); an on-disk, partition-pruned
@@ -485,7 +484,7 @@ def query_ivf_index(
     query_vec: str = "query_vec",
 ) -> DataFrame:
     """Top-k over a persisted index. Only the probed bucket partitions are
-    read (dynamic partition pruning via the broadcast probe join)."""
+    read (a static partition filter on the driver-picked probe ids)."""
     corpus, centroids, manifest = load_ivf_index(spark, path)
     return ivf_top_k(
         queries,
@@ -518,8 +517,8 @@ def append_ivf_index(
     sags), and an append must cost O(batch), not O(index). The write is
     ``mode=append`` + ``partitionBy``: only the touched bucket
     directories gain files, existing files are never rewritten, and
-    dynamic partition pruning on the probe join keeps working because
-    the layout is unchanged (pinned by test).
+    queries keep pruning to the probed bucket directories because the
+    layout is unchanged (pinned by test).
 
     ``check_ids=True`` drops intra-batch duplicate ids, then anti-joins
     the batch against the existing ids — one narrow column scan of the

@@ -3,22 +3,33 @@ bucketed variant for scale.
 
 Reference semantics: ``top_k(query, corpus, k)`` scores the query against every
 corpus vector, sorts desc and truncates (src/similarity.rs:31-40). In Spark
-that is a broadcast of the (small) query side against the (huge) corpus side,
-a JVM-side cosine expression, and a window top-k whose partial
-``WindowGroupLimit`` keeps only ≤ k rows per (query, map task) ahead of the
-shuffle — the corpus itself is never shuffled.
+the (small) query side is collected to the driver and ships in the closure
+of the NumPy cosine kernel (operators/fast_vector.py, the exact left fold of
+functions/vector.py::cosine_similarity); the corpus streams through it once,
+and a window top-k whose partial ``WindowGroupLimit`` keeps only ≤ k rows per
+(query, map task) ahead of the shuffle ranks the scores — the corpus itself
+is never shuffled.
 
 At 100 TB the brute-force variant is the correctness baseline; ``ivf_top_k``
-is the scale path: corpus vectors are bucketed by nearest coarse centroid
-(partition-prunable), queries probe only ``nprobe`` buckets.
+is the scale path: corpus vectors are bucketed by nearest coarse centroid,
+each query's ``nprobe`` buckets are picked on the driver, and the corpus is
+read through a static ``centroid_id IN (...)`` filter — partition pruning
+on an index persisted by ``centroid_id``.
 """
 
 from __future__ import annotations
 
+import math
+
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import IntegralType
 
 from fastembed_rs_spark.functions.vector import cosine_similarity, cosine_similarity_fixed
+
+
+class QueryDimensionError(ValueError):
+    """A query vector's length differs from the ``dim`` the caller passed."""
 
 
 def _cos(a: str, b: str, dim: int | None) -> Column:
@@ -49,6 +60,48 @@ def _ranked_topk(scored: DataFrame, query_id: str, id_col: str, k: int,
     )
 
 
+def _collect_queries(
+    queries: DataFrame, query_id: str, query_vec: str, dim: int | None
+) -> list[tuple[int, list[float] | None]]:
+    """The query side on the driver, as kernel targets. Query ids must be
+    integral (the kernel carries them as long); every non-NULL vector
+    must have ``dim`` components when ``dim`` is given."""
+    if not isinstance(queries.schema[query_id].dataType, IntegralType):
+        raise TypeError(
+            f"{query_id} must be an integral column, "
+            f"not {queries.schema[query_id].dataType.simpleString()}"
+        )
+    rows = queries.select(query_id, query_vec).collect()
+    targets = [(r[0], None if r[1] is None else list(r[1])) for r in rows]
+    if dim is not None:
+        bad = [(q, len(v)) for q, v in targets if v is not None and len(v) != dim]
+        if bad:
+            raise QueryDimensionError(
+                f"query vectors must have dim {dim}; "
+                f"(query id, length) {bad[:5]} do not"
+            )
+    return targets
+
+
+def _kernel_topk(
+    pairs: DataFrame, queries: DataFrame, query_id: str, id_col: str, k: int,
+    round_to: int | None,
+) -> DataFrame:
+    """Rank kernel (id, query id long, raw score) pairs: the query id back
+    in the query side's type, NaN restored (mapInPandas hands it over as
+    NULL; the kernel never scores NULL), Spark-side rounding, then the
+    window top-k."""
+    score = F.coalesce(F.col("score"), F.lit(float("nan")))
+    if round_to is not None:
+        score = F.round(score, round_to)
+    scored = pairs.select(
+        F.col(query_id).cast(queries.schema[query_id].dataType).alias(query_id),
+        F.col(id_col),
+        score.alias("score"),
+    )
+    return _ranked_topk(scored, query_id, id_col, k)
+
+
 def cosine_top_k(
     queries: DataFrame,
     corpus: DataFrame,
@@ -63,50 +116,21 @@ def cosine_top_k(
     """Brute-force cosine top-k of every query against the whole corpus.
 
     Result: (query_id, id_col, score double, rank long), rank 1 = best.
+    The query side is collected (it must be broadcast-sized, with an
+    integral id) and scored against the corpus in one NumPy kernel pass.
     ``round_to`` rounds the score *before* ranking so that rankings are
     reproducible across engines/float orders (ties broken by id asc).
-    Pass ``dim`` to keep the scoring inside whole-stage codegen.
-    """
-    scored = corpus.crossJoin(F.broadcast(queries)).select(
-        F.col(query_id),
-        F.col(id_col),
-        _cos(query_vec, vec_col, dim).alias("score"),
-    )
-    if round_to is not None:
-        scored = scored.withColumn("score", F.round("score", round_to))
-    return _ranked_topk(scored, query_id, id_col, k)
-
-
-def cosine_top_k_fast(
-    queries: DataFrame,
-    corpus: DataFrame,
-    k: int,
-    query_id: str = "query_id",
-    query_vec: str = "query_vec",
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    round_to: int | None = 6,
-) -> DataFrame:
-    """``cosine_top_k`` with the corpus × queries scoring routed through the
-    NumPy tile kernel (operators/fast_vector.py) — for CONSTANT-size query
-    sets (the probe set is collected to the driver and ships in the kernel
-    closure, the same bound that makes it broadcastable). Bit-identical
-    scores to the expression path (kernel parity pinned by test), same
-    (score desc, id asc) rank order after rounding. Use for the
-    brute-force ground-truth passes of the eval/calibration queries, where
-    nq × corpus through the interpreted lambda fold was the dominant cost.
+    ``dim``, when given, is checked against every query vector
+    (``QueryDimensionError`` on a mismatch).
     """
     from fastembed_rs_spark.operators.fast_vector import pairwise_cosine_fast
 
-    rows = queries.select(query_id, query_vec).collect()
-    targets = [(r[0], list(r[1])) for r in rows]
-    scored = pairwise_cosine_fast(
-        corpus, id_col, vec_col, targets,
-        target_id_name=query_id, score_name="score",
+    targets = _collect_queries(queries, query_id, query_vec, dim)
+    pairs = pairwise_cosine_fast(
+        corpus, id_col, vec_col, targets, target_id_name=query_id,
+        score_name="score",
     )
-    if round_to is not None:
-        scored = scored.withColumn("score", F.round("score", round_to))
-    return _ranked_topk(scored, query_id, id_col, k)
+    return _kernel_topk(pairs, queries, query_id, id_col, k, round_to)
 
 
 def train_ivf_centroids(
@@ -383,6 +407,42 @@ def assign_ivf_buckets_fast(
     return corpus.join(best.select(id_col, centroid_id), id_col)
 
 
+def _probe_buckets(
+    spark, targets: list, centroids: list, nprobe: int
+) -> dict[int, list[int]]:
+    """Each query's ``nprobe`` nearest buckets among the collected
+    (centroid id, vector) rows, picked on the driver:
+    {centroid id: [indexes of the queries that probe it]}.
+
+    Order: Spark ``round(cos, 6)`` descending (NaN first, as Spark sorts
+    it), then ``centroid_id`` ascending. The raw scores come from the
+    kernel fold; the rounding is Spark's own ``round`` (BigDecimal
+    HALF_UP over the shortest decimal string, which neither NumPy nor
+    Python reproduces), run over one local table — no Spark job."""
+    from fastembed_rs_spark.operators.fast_vector import cosine_matrix
+    from fastembed_rs_spark.operators.scale import local_table
+
+    raw = cosine_matrix([c[1] for c in centroids], targets)
+    cells = [
+        (qi, ci, float(raw[ci, qi]))
+        for qi in range(len(targets)) for ci in range(len(centroids))
+    ]
+    ranked: dict[int, list] = {qi: [] for qi in range(len(targets))}
+    if cells:
+        rounded = local_table(spark, cells, "qi int, ci int, s double").select(
+            "qi", "ci", F.round("s", 6).alias("s")
+        ).collect()
+        for qi, ci, sc in rounded:
+            # NaN arrives as NULL (Arrow masks it); raw scores are never NULL
+            nan = sc is None or math.isnan(sc)
+            ranked[qi].append((not nan, 0.0 if nan else -sc, centroids[ci][0]))
+    probes: dict[int, list[int]] = {}
+    for qi, cand in ranked.items():
+        for _, _, cid in sorted(cand)[:nprobe]:
+            probes.setdefault(int(cid), []).append(qi)
+    return probes
+
+
 def ivf_top_k(
     queries: DataFrame,
     bucketed_corpus: DataFrame,
@@ -402,30 +462,22 @@ def ivf_top_k(
     centroids are nearest to each query, then exact cosine within them.
 
     ``bucketed_corpus`` must carry ``centroid_id`` (see assign_ivf_buckets).
-    The probe table (queries × nprobe) is broadcast into an equi-join on
-    ``centroid_id`` — the physical plan is a broadcast hash join that touches
-    only matching buckets, which is what makes this survive 100× scale.
+    Queries and centroids are collected (both tiny by construction) and
+    the probes are picked on the driver (``_probe_buckets``). The corpus
+    is read through a static ``centroid_id IN (probed ids)`` filter — on
+    an index partitioned by ``centroid_id`` only those bucket directories
+    are scanned — and each candidate row is scored, in the NumPy kernel,
+    only against the queries that probe its bucket. Same result schema
+    and ``dim`` check as ``cosine_top_k``.
     """
-    probes = (
-        queries.crossJoin(F.broadcast(centroids))
-        .select(
-            query_id,
-            query_vec,
-            centroid_id,
-            F.round(_cos(query_vec, centroid_vec, dim), 6).alias("__pscore"),
-        )
+    from fastembed_rs_spark.operators.fast_vector import pairwise_cosine_fast
+
+    targets = _collect_queries(queries, query_id, query_vec, dim)
+    cents = centroids.select(centroid_id, centroid_vec).collect()
+    probes = _probe_buckets(queries.sparkSession, targets, cents, nprobe)
+    candidates = bucketed_corpus.filter(F.col(centroid_id).isin(sorted(probes)))
+    pairs = pairwise_cosine_fast(
+        candidates, id_col, vec_col, targets, target_id_name=query_id,
+        score_name="score", bucket_col=centroid_id, probes=probes,
     )
-    wp = Window.partitionBy(query_id).orderBy(F.desc("__pscore"), F.asc(centroid_id))
-    probes = (
-        probes.withColumn("__pr", F.row_number().over(wp))
-        .filter(F.col("__pr") <= nprobe)
-        .select(query_id, query_vec, centroid_id)
-    )
-    scored = bucketed_corpus.join(F.broadcast(probes), on=centroid_id).select(
-        F.col(query_id),
-        F.col(id_col),
-        _cos(query_vec, vec_col, dim).alias("score"),
-    )
-    if round_to is not None:
-        scored = scored.withColumn("score", F.round("score", round_to))
-    return _ranked_topk(scored, query_id, id_col, k)
+    return _kernel_topk(pairs, queries, query_id, id_col, k, round_to)

@@ -105,6 +105,16 @@ _CHANGED_THIS_ROUND: tuple[str, ...] = (
     # retrain tmp-write overlap — re-verify the audits that drive them
     "curation_store_audit",
     "index_retrain_compact_audit",
+    # cosine_top_k / ivf_top_k score on the NumPy cosine kernel and pick
+    # IVF probes on the driver
+    "cosine_topk",
+    "mrl_truncate_topk",
+    "jl_project_topk",
+    "mmr_diversify",
+    "ann_recall_eval",
+    "ann_probe_sweep",
+    "ann_ivf_topk",
+    "ann_ivf_trained",
 )
 
 

@@ -528,16 +528,12 @@ FROM sel{k}""")
 )
 def q_mmr_diversify(spark: SparkSession, sf_dir: str) -> DataFrame:
     from fastembed_rs_spark.operators.mmr import mmr_rerank
-    from fastembed_rs_spark.operators.topk import cosine_top_k_fast
 
     emb = t(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 3).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
     )
-    # constant 3-query set -> NumPy kernel scoring (bit-identical to the
-    # codegen expression path, pinned by test); the unrolled fixed-dim
-    # codegen chain was 5x the kernel's cost on this corpus
-    cands = cosine_top_k_fast(
+    cands = cosine_top_k(
         queries, emb, k=20, round_to=6
     ).select("query_id", "vec_id", F.col("score").alias("relevance"))
     cands = cands.join(

@@ -372,7 +372,7 @@ LEFT JOIN hits h ON q.query_id = h.query_id"""
 )
 def q_ann_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     from fastembed_rs_spark.operators.topk import (
-        cosine_top_k_fast,
+        cosine_top_k,
         train_ivf_centroids,
     )
 
@@ -385,9 +385,7 @@ def q_ann_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     approx = ivf_top_k(
         queries, bucketed, centroids, k=10, nprobe=2, round_to=6
     ).select("query_id", "vec_id")
-    # ground truth through the NumPy tile kernel: 20 probes x corpus via
-    # the interpreted lambda fold was the dominant cost of this query
-    truth = cosine_top_k_fast(queries, emb, k=10, round_to=6).select(
+    truth = cosine_top_k(queries, emb, k=10, round_to=6).select(
         "query_id", "vec_id"
     )
     hits = truth.join(approx, ["query_id", "vec_id"]).groupBy("query_id").agg(
@@ -854,7 +852,7 @@ LEFT JOIN (SELECT g3.nprobe, CAST(sum(ch.s) AS BIGINT) AS s
 )
 def q_ann_probe_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     from fastembed_rs_spark.operators.topk import (
-        cosine_top_k_fast,
+        cosine_top_k,
         train_ivf_centroids,
     )
 
@@ -886,7 +884,7 @@ def q_ann_probe_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("pr", F.row_number().over(wq))
         .select("query_id", "centroid_id", "pr")
     )
-    truth = cosine_top_k_fast(queries, emb, k=topk, round_to=6).select(
+    truth = cosine_top_k(queries, emb, k=topk, round_to=6).select(
         "query_id", "vec_id"
     )
     tr = truth.join(assigned, "vec_id").join(pr, ["query_id", "centroid_id"])

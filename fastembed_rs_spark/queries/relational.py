@@ -401,10 +401,6 @@ def q_jl_project_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     queries = proj.filter(F.col("vec_id") < 5).select(
         F.col("vec_id").alias("query_id"), F.col("p").alias("query_vec")
     )
-    # expression-path scoring deliberately KEPT (r10 A/B): over 16-dim
-    # projected vectors the interpreted fold is cheaper than shipping the
-    # checkpointed rows back through Arrow into the NumPy kernel
-    # (old 0.94s vs kernel 1.09s min-of-3, same session)
     return cosine_top_k(
         queries, proj, k=10, vec_col="p", round_to=6
     ).select("query_id", "vec_id", "score", "rank")

@@ -52,16 +52,13 @@ QUALIFY rank <= 10
     "brute-force cosine top-10, 5 query vectors vs whole corpus (src/similarity.rs:31-40)",
 )
 def q_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from fastembed_rs_spark.operators.topk import cosine_top_k_fast
+    from fastembed_rs_spark.operators.topk import cosine_top_k
 
     emb = t(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 5).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
     )
-    # constant 5-query set -> NumPy kernel scoring (bit-identical to the
-    # interpreted fold, pinned by test) instead of nq x corpus through the
-    # interpreted higher-order expression
-    return cosine_top_k_fast(queries, emb, k=10, round_to=6).select(
+    return cosine_top_k(queries, emb, k=10, round_to=6).select(
         "query_id", "vec_id", "score", "rank"
     )
 

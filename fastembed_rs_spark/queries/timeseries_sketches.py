@@ -714,7 +714,7 @@ QUALIFY rank <= 10
 )
 def q_mrl_truncate_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from fastembed_rs_spark.operators.quantize import mrl_truncate
-    from fastembed_rs_spark.operators.topk import cosine_top_k_fast
+    from fastembed_rs_spark.operators.topk import cosine_top_k
 
     emb = t(spark, sf_dir, "embeddings")
     corpus = emb.select("vec_id", mrl_truncate("embedding", 16).alias("embedding"))
@@ -722,9 +722,7 @@ def q_mrl_truncate_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_id").alias("query_id"),
         mrl_truncate("embedding", 16).alias("query_vec"),
     )
-    # constant 5-query set -> NumPy kernel scoring (bit-identical fold,
-    # pinned by test) instead of the per-row codegen cosine chain
-    return cosine_top_k_fast(qs, corpus, k=10, round_to=6).select(
+    return cosine_top_k(qs, corpus, k=10, round_to=6).select(
         "query_id", "vec_id", "score", "rank"
     )
 

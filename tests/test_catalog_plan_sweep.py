@@ -55,7 +55,7 @@ PYTHON_OK = {
     "quality_percent_rank",
     "ann_recall_eval",  # trained-IVF probe + brute-force truth: both sides
                         # score through the NumPy cosine kernel by design
-    "ann_probe_sweep",  # kernel brute-force truth (cosine_top_k_fast);
+    "ann_probe_sweep",  # kernel brute-force truth (cosine_top_k);
                         # the assign side is checkpoint-truncated
     "kmeans_distortion_ladder",  # joint kernel assign pass (all k at once)
                                  # over the corpus by design
@@ -75,6 +75,7 @@ PYTHON_OK = {
     # keeps them out of this list like simhash_hamming_curve
     "cosine_topk",  # constant-query-set NumPy cosine kernel
     "mrl_truncate_topk",  # same kernel over the truncated vectors
+    "jl_project_topk",  # cosine_top_k's kernel over the projected vectors
     # simhash_hamming_curve uses the same kernel, but its pair side is
     # checkpointed so the final plan shows no Python node — the staleness
     # gate keeps it out of this list

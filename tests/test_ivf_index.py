@@ -1,6 +1,7 @@
 """Persisted IVF index (operators/ivf_index.py): round-trip equality with
-the in-memory pipeline, recall vs brute force, and the dynamic-partition-
-pruning plan property that makes the on-disk layout matter."""
+the in-memory pipeline, recall vs brute force, and the partition-pruning
+property (only probed bucket directories are read) that makes the on-disk
+layout matter."""
 
 from __future__ import annotations
 
@@ -75,12 +76,62 @@ def test_recall_vs_brute_force(spark, index_path):
     assert len(e & a) / len(e) >= 0.5  # k=8, nprobe=4: half the index probed
 
 
-def test_query_scan_is_dynamically_pruned(spark, index_path):
-    """The corpus scan must carry a dynamic-pruning PartitionFilter fed by
-    the broadcast probe join — only probed bucket directories are read."""
-    df = query_ivf_index(spark, index_path, _queries(spark), k=5, nprobe=2)
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "dynamicpruning" in plan.lower()
+def _reference_probes(queries, centroids, nprobe):
+    """Bucket ids the queries probe, by a Spark window over the rounded
+    expression-path cosine: score desc, then centroid_id asc."""
+    from pyspark.sql import Window
+
+    from fastembed_rs_spark.functions.vector import cosine_similarity
+
+    w = Window.partitionBy("query_id").orderBy(F.desc("s"), F.asc("centroid_id"))
+    ranked = queries.crossJoin(centroids).select(
+        "query_id", "centroid_id",
+        F.round(cosine_similarity("query_vec", "centroid_vec"), 6).alias("s"),
+    ).withColumn("r", F.row_number().over(w))
+    return {r[0] for r in ranked.filter(F.col("r") <= nprobe).select("centroid_id").collect()}
+
+
+def _corpus_scan(df):
+    """(bucket ids named by the corpus scan's partition filter, partitions
+    it read), from the executed plan of an already collected query."""
+    import re
+
+    def walk(node):
+        cls = node.getClass().getSimpleName()
+        if cls == "AdaptiveSparkPlanExec":
+            yield from walk(node.executedPlan())
+            return
+        if cls.endswith("QueryStageExec"):
+            yield from walk(node.plan())
+            return
+        if cls == "FileSourceScanExec":
+            yield node
+        kids = node.children()
+        for i in range(kids.size()):
+            yield from walk(kids.apply(i))
+
+    scans = list(walk(df._jdf.queryExecution().executedPlan()))
+    assert len(scans) == 1, [s.toString() for s in scans]
+    pf = scans[0].metadata().apply("PartitionFilters")
+    m = re.search(r"centroid_id#\d+ (?:IN \(([^)]*)\)|INSET ([^\]]*))", pf)
+    assert m, pf
+    ids = {int(x) for x in (m.group(1) or m.group(2)).split(",")}
+    return ids, scans[0].metrics().apply("numPartitions").value()
+
+
+def test_query_scan_reads_only_probed_buckets(spark, index_path):
+    """After execution, the corpus scan's partition filter names exactly
+    the probed bucket ids and the scan reads only those partitions — on a
+    probe set that is a strict subset of the index's buckets."""
+    queries = _queries(spark).filter(F.col("query_id") < 2)
+    _, centroids, manifest = load_ivf_index(spark, index_path)
+    probed = _reference_probes(queries, centroids, nprobe=2)
+    assert len(probed) < manifest["k"]
+    df = query_ivf_index(spark, index_path, queries, k=5, nprobe=2)
+    assert df.collect()
+    ids, read = _corpus_scan(df)
+    assert ids == probed
+    assert read == len(probed)
 
 
 def test_append_ivf_index_no_retrain(spark):
@@ -564,8 +615,10 @@ def test_compact_ivf_index_defragments_without_changing_results(spark):
         assert rows_after == rows_before
         q_after_df = query_ivf_index(spark, d, probe, k=5, nprobe=2)
         assert sorted(map(tuple, q_after_df.collect())) == q_before
-        plan = q_after_df._jdf.queryExecution().executedPlan().toString()
-        assert "dynamicpruning" in plan.lower()
+        probed = _reference_probes(
+            probe, spark.read.parquet(f"{d}/centroids"), nprobe=2
+        )
+        assert _corpus_scan(q_after_df) == (probed, len(probed))
     finally:
         shutil.rmtree(d, ignore_errors=True)
 

@@ -274,22 +274,115 @@ def test_train_ivf_centroids_multi_matches_per_k(spark):
             assert got[(k, cid)] == vec, (k, cid)
 
 
-def test_cosine_top_k_fast_matches_expression_path(spark):
-    """The kernel-scored brute-force top-k must return EXACTLY the same
-    (query, id, score, rank) rows as the expression-path cosine_top_k —
-    same rounded scores, same tie order."""
-    from fastembed_rs_spark.operators.topk import cosine_top_k, cosine_top_k_fast
+def _fold_top_k(queries, corpus, k, round_to):
+    """Reference top-k: the functions/vector.py lambda-fold cosine over a
+    broadcast cross join, ranked by the operator's own window."""
+    from fastembed_rs_spark.functions.vector import cosine_similarity
+    from fastembed_rs_spark.operators.topk import _ranked_topk
 
+    scored = corpus.crossJoin(F.broadcast(queries)).select(
+        "query_id", "vec_id",
+        cosine_similarity("query_vec", "embedding").alias("score"),
+    )
+    if round_to is not None:
+        scored = scored.withColumn("score", F.round("score", round_to))
+    return _ranked_topk(scored, "query_id", "vec_id", k)
+
+
+def _canon(df):
+    """Sorted result rows with NaN made comparable, plus (name, type)."""
+    rows = sorted(
+        (r["query_id"], r["rank"], r["vec_id"],
+         "nan" if r["score"] != r["score"] else r["score"])
+        for r in df.collect()
+    )
+    return rows, [(f.name, f.dataType) for f in df.schema.fields]
+
+
+def test_cosine_top_k_matches_fold_reference(spark):
+    """The kernel-scored cosine_top_k returns EXACTLY the rows (same raw or
+    rounded scores, same tie order) and the schema of the lambda-fold
+    reference — on real embeddings and on edge inputs: NULL and zero
+    vectors score 0.0, an inf component scores NaN and ranks first,
+    longer/shorter corpus vectors score over the common prefix
+    (src/similarity.rs:14), an empty query side gives 0 rows, and int
+    as well as long query ids keep their type."""
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     queries = emb.filter(F.col("vec_id") < 7).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
     )
-    slow = cosine_top_k(queries, emb, k=9, round_to=6).select(
-        "query_id", "vec_id", "score", "rank"
-    ).collect()
-    fast = cosine_top_k_fast(queries, emb, k=9, round_to=6).select(
-        "query_id", "vec_id", "score", "rank"
-    ).collect()
-    key = lambda r: (r["query_id"], r["rank"])
-    assert sorted(map(tuple, slow), key=lambda t: (t[0], t[3])) == \
-        sorted(map(tuple, fast), key=lambda t: (t[0], t[3]))
+    assert _canon(cosine_top_k(queries, emb, k=9, round_to=6)) == \
+        _canon(_fold_top_k(queries, emb, 9, 6))
+
+    inf = float("inf")
+    corpus = spark.createDataFrame(
+        [
+            (0, [1.0, 2.0, 3.0]),
+            (1, None),
+            (2, [0.0, 0.0, 0.0]),
+            (3, [inf, 1.0, 0.0]),
+            (4, [1.0, 2.0, 3.0, 4.0, 5.0]),
+            (5, [2.0]),
+            (6, [-1.0, 0.5, 2.0]),
+            (7, [0.1, 0.2, 0.3]),
+        ],
+        "vec_id long, embedding array<double>",
+    )
+    qrows = [(10, [1.0, 2.0, 3.0]), (11, [0.5, -1.0, 2.0]), (12, None)]
+    for qtype in ("int", "bigint"):
+        qs = spark.createDataFrame(
+            qrows, f"query_id {qtype}, query_vec array<double>"
+        )
+        for round_to in (None, 6):
+            got = _canon(cosine_top_k(qs, corpus, k=8, round_to=round_to))
+            assert got == _canon(_fold_top_k(qs, corpus, 8, round_to))
+        rows, schema = got
+        assert schema[0][1].simpleString() == qtype
+        by = {(q, v): s for q, _, v, s in rows}
+        assert by[(10, 1)] == by[(10, 2)] == by[(12, 0)] == 0.0
+        assert [r[2] for r in rows if r[0] == 10][:1] == [3]  # NaN first
+        assert by[(10, 3)] == "nan" and by[(10, 0)] == by[(10, 7)] == 1.0
+        empty = qs.filter(F.lit(False))
+        got = _canon(cosine_top_k(empty, corpus, k=3))
+        assert got == _canon(_fold_top_k(empty, corpus, 3, None))
+        assert got[0] == []
+
+
+def test_top_k_dim_checks_query_vectors(spark, emb):
+    """``dim`` is a check on the collected query vectors, not a codegen
+    switch: a mismatch raises QueryDimensionError (a ValueError)."""
+    from fastembed_rs_spark.operators.topk import QueryDimensionError
+
+    queries = emb.filter(F.col("vec_id") < 3).select(
+        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
+    )
+    centroids = emb.filter(F.col("vec_id") % 10 == 0).select(
+        F.col("vec_id").alias("centroid_id"), F.col("embedding").alias("centroid_vec")
+    )
+    with pytest.raises(QueryDimensionError, match="dim 7"):
+        cosine_top_k(queries, emb, k=3, dim=7)
+    with pytest.raises(ValueError, match="dim 9"):
+        ivf_top_k(queries, emb.withColumn("centroid_id", F.lit(0)),
+                  centroids, k=3, nprobe=1, dim=9)
+
+
+def test_ivf_probe_ties_go_to_lower_centroid_id(spark):
+    """Two centroids whose probe scores tie after round(…, 6) (raw scores
+    1 - 2e-8 and 1 - 5e-9): nprobe=1 probes the LOWER centroid_id, even
+    though the higher one has the higher raw score and holds the exact
+    match."""
+    centroids = spark.createDataFrame(
+        [(3, [1.0, 2e-4]), (5, [1.0, 1e-4]), (7, [0.0, 1.0])],
+        "centroid_id int, centroid_vec array<double>",
+    )
+    bucketed = spark.createDataFrame(
+        [(100, [1.0, 0.5], 3), (200, [1.0, 0.0], 5), (300, [0.0, 1.0], 7)],
+        "vec_id long, embedding array<double>, centroid_id int",
+    )
+    qs = spark.createDataFrame(
+        [(1, [1.0, 0.0])], "query_id long, query_vec array<double>"
+    )
+    got = ivf_top_k(qs, bucketed, centroids, k=3, nprobe=1).collect()
+    assert [r["vec_id"] for r in got] == [100]
+    got = ivf_top_k(qs, bucketed, centroids, k=3, nprobe=2).collect()
+    assert sorted(r["vec_id"] for r in got) == [100, 200]

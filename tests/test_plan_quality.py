@@ -48,10 +48,10 @@ def test_vector_search_paths_stay_jvm_side(spark, catalog):
 
     cosine_topk / mrl_truncate_topk moved OFF this list in r10: their
     constant query sets score through the vectorized NumPy kernel
-    (cosine_top_k_fast, one MapInPandas pass — measured 5x the per-row
-    codegen chain and bit-identical by test), so they pin the kernel
-    shape instead: exactly one MapInPandas, no row-UDF nodes, and no
-    broadcast (the constant queries ride the kernel closure)."""
+    (cosine_top_k, one MapInPandas pass — measured 5x the per-row
+    codegen chain and bit-identical to the fold by test), so they pin the
+    kernel shape instead: exactly one MapInPandas and no row-UDF nodes
+    (the constant queries ride the kernel closure)."""
     for name in ("int8_quant_topk", "binary_quant_topk"):
         p = plan_of(spark, catalog, name)
         assert "BatchEvalPython" not in p and "ArrowEvalPython" not in p, name
@@ -253,11 +253,12 @@ def test_jl_projection_is_shuffle_free_map(spark, catalog):
     """The JL projection is a per-row map (NumPy kernel, bit-identical to
     the expression path — pinned in test_vector_functions) that runs once
     inside a localCheckpoint; the FINAL plan is the top-k over the
-    checkpointed projection: broadcast of the 5 projected queries + the
-    WindowGroupLimit-capped rank window, no Python nodes."""
+    checkpointed projection: one cosine-kernel pass carrying the 5
+    projected queries in its closure + the WindowGroupLimit-capped rank
+    window, no row-UDF nodes."""
     p = plan_of(spark, catalog, "jl_project_topk")
     assert "BatchEvalPython" not in p and "ArrowEvalPython" not in p
-    assert "BroadcastExchange" in p  # queries side
+    assert p.count("MapInPandas") == 1  # cosine_top_k's kernel
     assert "WindowGroupLimit" in p  # rank <= 10 capped
 
 

@@ -67,20 +67,20 @@ def main() -> int:
             scols = sdf.columns
             srows = [tuple(r) for r in sdf.collect()]
         except Exception as e:  # noqa: BLE001
-            print(f"FAIL  {name}: spark error: {e}")
+            print(f"FAIL  {name}: spark error: {e}", flush=True)
             failures += 1
             continue
         if spec.oracle is None:
-            print(f"rows  {name}: {len(srows)} rows (no oracle) [{time.time()-t0:.1f}s]")
+            print(f"rows  {name}: {len(srows)} rows (no oracle) [{time.time()-t0:.1f}s]", flush=True)
             if len(srows) == 0:
-                print(f"WARN  {name}: zero rows")
+                print(f"WARN  {name}: zero rows", flush=True)
             continue
         try:
             res = con.execute(spec.oracle)
             ocols = [d[0] for d in res.description]
             orows = res.fetchall()
         except Exception as e:  # noqa: BLE001
-            print(f"FAIL  {name}: oracle error: {e}")
+            print(f"FAIL  {name}: oracle error: {e}", flush=True)
             failures += 1
             continue
         problems = []
@@ -95,10 +95,10 @@ def main() -> int:
                 diff = [(a, b) for a, b in zip(ns, no) if a != b][:3]
                 problems.append(f"value hash {hs} != {ho}; first diffs: {diff}")
         if problems:
-            print(f"FAIL  {name}: " + "; ".join(problems))
+            print(f"FAIL  {name}: " + "; ".join(problems), flush=True)
             failures += 1
         else:
-            print(f"OK    {name}: {len(srows)} rows, hash match [{time.time()-t0:.1f}s]")
+            print(f"OK    {name}: {len(srows)} rows, hash match [{time.time()-t0:.1f}s]", flush=True)
     spark.stop()
     return 1 if failures else 0
 
